@@ -613,7 +613,10 @@ class DataStore:
             raise E.NotFoundError(f"block {bid}")
         data = self.remote.get_block(bid)
         got = self.freezer.add_bytes(data)
-        assert got == bid, f"remote block hash mismatch: {got} != {bid}"
+        if got != bid:
+            raise E.BlockHashMismatchError(
+                f"remote block hash mismatch: {got} != {bid}"
+            )
         self.pushed.add(bid)
         return data
 
@@ -650,7 +653,8 @@ class DataStore:
         if self.journaling:
             self._unjournaled_mutation = True
         if not node.is_dir:
-            assert node.local_path is not None, "file with no bid nor content"
+            if node.local_path is None:
+                raise E.CatalogError(f"inode {inode}: file with no bid nor content")
             bid = self.freezer.add_file(node.local_path)
             size = os.path.getsize(node.local_path)
             self.nodes[inode] = replace(

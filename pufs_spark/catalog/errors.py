@@ -43,3 +43,8 @@ class StaleReadError(CatalogError):
     generation/etag no longer matches the backing object (reference
     fails such reads via GenerationMatch conditions, remote/gcs.go:302-331,
     and If-Match, remote/http.go:24)."""
+
+
+class BlockHashMismatchError(CatalogError):
+    """A fetched block's content hash differs from the bid it was asked
+    for (corrupted or tampered remote); the bytes are never returned."""

@@ -30,10 +30,11 @@ STOPWORDS = {
 # call site.
 for _words in STOPWORDS.values():
     for _w in _words:
-        assert _w.isascii() and _w.isalpha() and _w.islower(), (
-            f"stopword {_w!r} is not a bare [a-z]+ word; the F.expr "
-            "literal interpolation in quality_stats/lang_id would break"
-        )
+        if not (_w.isascii() and _w.isalpha() and _w.islower()):
+            raise ValueError(
+                f"stopword {_w!r} is not a bare [a-z]+ word; the F.expr "
+                "literal interpolation in quality_stats/lang_id would break"
+            )
 
 
 def tokens_col(text_col: str = "text"):
@@ -148,7 +149,8 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     # collision-resistant working name (ADVICE r15): an input frame
     # that already carries `_toks` must not be silently overwritten
-    assert "__pufs_toks" not in df.columns
+    if "__pufs_toks" in df.columns:
+        raise ValueError("lang_id input already has a `__pufs_toks` column")
     out = df.withColumn("__pufs_toks", toks)
     for lang, words in STOPWORDS.items():
         out = out.withColumn(f"_hits_{lang}", hits(words))

@@ -5,23 +5,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def _parse_bytes(s: str, default: int) -> int:
-    """Spark size-conf string -> bytes ('128MB', '4m', '134217728b',
-    plain int). Advisory — any parse failure returns ``default``."""
-    try:
-        t = str(s).strip().lower()
-        for suf, mult in (
-            ("tb", 1 << 40), ("gb", 1 << 30), ("mb", 1 << 20),
-            ("kb", 1 << 10), ("t", 1 << 40), ("g", 1 << 30),
-            ("m", 1 << 20), ("k", 1 << 10), ("b", 1),
-        ):
-            if t.endswith(suf):
-                return int(float(t[: -len(suf)]) * mult)
-        return int(t)
-    except (ValueError, TypeError):
-        return default
-
-
 def spread_for_compute(
     df: DataFrame,
     cols: list[str] | None = None,
@@ -34,12 +17,14 @@ def spread_for_compute(
     text/embedding operators are compute-dense: ~300 chars of text cost
     hundreds of regexp/array/hash evaluations per row, so a 15MB
     documents file that fits one input split runs the whole operator on
-    ONE core of 32. Measured on the r11 sf1.0 tile (50k docs arriving
-    as 2 partitions): the D1 MinHash explode alone took 17.4s at
+    ONE core of 32. Measured on an sf1.0 tile (50k docs arriving as 2
+    partitions): the D1 MinHash explode alone took 17.4s at
     ~1.2us/shingle — single-thread codegen speed, not a slow plan —
     and dropped to <1s spread over 32 cores; T1/T2 showed the same
     shape. The repartition ships only the projected columns — trivial
-    bytes relative to the compute it unlocks.
+    bytes relative to the compute it unlocks. The gate reads the exact
+    partition count (``.rdd.getNumPartitions()``: one physical planning,
+    no job).
 
     Scale behavior: a real 100TB corpus arrives in >>cores partitions
     and this is a no-op (the gate never REDUCES partitioning); the
@@ -53,7 +38,7 @@ def spread_for_compute(
     ``sortBeforeRepartition`` (on by default, for deterministic task
     retries) LOCALLY SORTS every row on ALL columns first, so a frame
     carrying wide binary payloads (media blobs) pays a comparison sort
-    over the payload bytes before the exchange (ADVICE r11). Hash
+    over the payload bytes before the exchange. Hash
     partitioning on a cheap distinct-ish key skips that sort entirely
     (it is already deterministic per row) and still ships each row
     once; balance is multinomial rather than exact — fine when the key
@@ -64,103 +49,14 @@ def spread_for_compute(
         # source's concern (maxFilesPerTrigger etc.), not this helper's
         return slim
     sc = df.sparkSession.sparkContext
-    if _estimated_scan_partitions(slim) < sc.defaultParallelism:
+    if slim.rdd.getNumPartitions() < sc.defaultParallelism:
         if by is not None:
             return slim.repartition(sc.defaultParallelism, by)
         return slim.repartition(sc.defaultParallelism)
     return slim
 
 
-# Logical nodes that KEEP their child's partitioning (row-local
-# transforms over one input). Everything else — joins, aggregates,
-# windows, repartitions, limits (GlobalLimit collapses to ~1 partition
-# at execution), samples, unions, set ops — invalidates the file
-# arithmetic and routes to the exact probe. Unknown / future node
-# names fail safe the same way.
-_PARTITION_PRESERVING = frozenset(
-    {
-        "Relation",  # LogicalRelation (file scans)
-        "LogicalRDD",
-        "Project",
-        "Filter",
-        "SubqueryAlias",
-        "View",
-        "Generate",  # explode — per-row fanout, same partitions
-        "Expand",
-        "WithColumns",
-        "UnresolvedRelation",
-    }
-)
-
-
-def _analyzed_node_names(df: DataFrame) -> list[str] | None:
-    """Node class names of ``df``'s ANALYZED logical plan (one tree
-    walk over py4j — no physical planning). None when the walk fails
-    (estimation is advisory; callers fall back to the exact probe)."""
-    try:
-        stack = [df._jdf.queryExecution().analyzed()]
-        names: list[str] = []
-        while stack:
-            node = stack.pop()
-            names.append(node.nodeName())
-            children = node.children()
-            for i in range(children.size()):
-                stack.append(children.apply(i))
-        return names
-    except Exception:  # noqa: BLE001 — advisory
-        return None
-
-
-def _estimated_scan_partitions(df: DataFrame) -> int:
-    """Estimate how many partitions ``df`` arrives in, cheaply.
-
-    ``df.rdd.getNumPartitions()`` is exact but compiles the physical
-    plan AND builds the RDD DAG on every call — ~0.1 s of driver time
-    per operator invocation (measured r15), pure overhead for a gate
-    that only asks "fewer than cores?". For the overwhelmingly common
-    scan-rooted frame, Spark sizes scan partitions from file bytes
-    (maxPartitionBytes, openCostInBytes), so the same arithmetic over
-    ``df.inputFiles()`` + ``os.stat`` reproduces the decision with one
-    plan ANALYSIS (no physical planning) and a driver-side metadata
-    walk. Estimation errors only matter near the cores boundary, where
-    both outcomes are fine (the repartition is a no-op cost-wise at
-    exactly-cores parallelism). Non-file-rooted frames (in-memory
-    fixtures, RDD-backed tests) fall back to the exact probe.
-
-    The file arithmetic is only VALID for narrow scan-rooted plans: a
-    plan that already contains a partitioning-changing operator (an
-    explicit repartition, a join/aggregate/window shuffle, a limit,
-    a sample, a union) arrives in THAT operator's partitioning, not
-    the scan's — e.g. the streaming gate stage spreads its input
-    BEFORE quality_stats, and estimating from file bytes there stacked
-    a second exchange on top (caught by test_streaming's plan pins,
-    r15). r15 denylisted substrings of the plan STRING, which (a)
-    missed GlobalLimit/Sample/Union-shaped plans entirely and (b)
-    false-positived on literals/column names containing e.g. 'Sort'
-    (ADVICE r15). r16 walks the analyzed plan's NODE NAMES via py4j
-    and allows only nodes that provably preserve the scan's
-    partitioning — anything unrecognized falls back to the exact
-    probe, so estimation errors stay in the safe (slow-probe)
-    direction."""
-    names = _analyzed_node_names(df)
-    if names is None or any(n not in _PARTITION_PRESERVING for n in names):
-        return df.rdd.getNumPartitions()
-    conf = df.sparkSession.conf
-    max_pb = _parse_bytes(
-        conf.get("spark.sql.files.maxPartitionBytes", "128MB"), 128 << 20
-    )
-    open_cost = _parse_bytes(
-        conf.get("spark.sql.files.openCostInBytes", "4MB"), 4 << 20
-    )
-    total = _estimated_scan_bytes(df, per_file_overhead=open_cost)
-    if total is None:
-        return df.rdd.getNumPartitions()
-    return max(1, -(-total // max_pb))
-
-
-def _estimated_scan_bytes(
-    df: DataFrame, per_file_overhead: int = 0
-) -> int | None:
+def _estimated_scan_bytes(df: DataFrame) -> int | None:
     """Sum of the on-disk bytes of ``df``'s leaf file scans (driver-
     side ``os.stat`` over ``inputFiles()`` — one plan analysis, no
     job). None for non-file-rooted or unstatable (remote) inputs."""
@@ -176,7 +72,7 @@ def _estimated_scan_bytes(
     for f in files:
         p = f[5:] if f.startswith("file:") else f
         try:
-            total += os.path.getsize(p) + per_file_overhead
+            total += os.path.getsize(p)
         except OSError:
             return None
     return total

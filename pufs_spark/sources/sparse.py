@@ -15,15 +15,19 @@ pending.go, region log core/freezer.go:420-509):
   core/freezer.go:226-227).
 - Concurrent/overlapping requests coalesce: fetch tasks are keyed by
   (bid, chunk) and deduplicated before hitting the remote — the
-  relational analog of region/pending.go:281-299's request joining.
+  analog of region/pending.go:281-299's request joining.
 
-Distribution model: the fetch plan (align → diff against the mask →
-explode to chunks → distinct) is DataFrame algebra reusing
-operators/intervals; the fetch itself is a mapPartitions job, one
-remote connection per partition, writing executor-side. The region log
-is SEGMENTED — each task appends its own `<bid>.regions.<task>` file
-and replay merges all segments — so there is no cross-task lock, the
-same commit discipline as Spark's own multi-file output commit.
+Distribution model: the fetch is PLANNED on the driver against the
+region mask (align → readahead → gaps → chunk set, deduplicated) —
+the mask is small and driver-resident, the same in-memory check the
+reference makes before joining or issuing fetches (core/freezer.go:
+602-612) — and EXECUTED on executors: one mapPartitions job over the
+chunk list, one remote connection per partition, writing
+executor-side. A fully cached request set starts no Spark job. The
+region log is SEGMENTED — each task appends its own
+`<bid>.regions.<task>` file and replay merges all segments — so there
+is no cross-task lock, the same commit discipline as Spark's own
+multi-file output commit.
 
 On a real cluster the cache root lives on fast shared storage (or the
 fetch job is routed so a bid's chunks land on the executor that will
@@ -36,11 +40,10 @@ import glob
 import os
 import struct
 import uuid
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from pufs_spark.operators import intervals
 
 CHUNK_SIZE = 200 * 1024  # reference: core/datastore.go:106
 READAHEAD = 5 * 1024 * 1024  # reference: core/freezer.go:226
@@ -118,13 +121,6 @@ class SparseFreezer:
         m = self.regions(bid)
         return len(m), sum(e - s for s, e in m)
 
-    def list_bids(self) -> list[str]:
-        return sorted(
-            n
-            for n in os.listdir(os.path.join(self.root, "chunks"))
-            if ".regions." not in n
-        )
-
     # -- data ----------------------------------------------------------
 
     def _pwrite(self, bid: str, start: int, data: bytes) -> None:
@@ -194,66 +190,6 @@ def merge_ranges(ranges: list[tuple[int, int]]) -> list[tuple[int, int]]:
     return out
 
 
-def regions_df(spark: SparkSession, freezer: SparseFreezer) -> DataFrame:
-    """The cache's current mask as a (bid, start, end) DataFrame — the
-    engine-side `regions` table view over the log segments."""
-    rows = [
-        (bid, s, e)
-        for bid in freezer.list_bids()
-        for (s, e) in freezer.regions(bid)
-    ]
-    return spark.createDataFrame(rows, "bid string, start long, `end` long")
-
-
-def plan_fetches(
-    spark: SparkSession,
-    freezer: SparseFreezer,
-    requests: DataFrame,
-    chunk_size: int = CHUNK_SIZE,
-    readahead: int = 0,
-    sizes: DataFrame | None = None,
-) -> DataFrame:
-    """The fetch plan: chunk-align each request (R5), extend by the
-    readahead window, diff against the cached mask (R1), explode the
-    gaps to chunk rows and dedup (T2 coalescing). Pure DataFrame
-    algebra; returns (bid, start, end) chunk rows to fetch."""
-    q = requests.select(
-        "bid",
-        F.monotonically_increasing_id().alias("qid"),
-        F.col("qstart").cast("long").alias("qstart"),
-        (F.col("qend").cast("long") + F.lit(readahead)).alias("qend"),
-    )
-    q = intervals.align_chunks(q, chunk_size)
-    if sizes is not None:
-        q = (
-            q.join(F.broadcast(sizes.select("bid", "size")), "bid", "left")
-            .withColumn(
-                "qend",
-                F.when(
-                    F.col("size").isNotNull(),
-                    F.least(F.col("qend"), F.col("size")),
-                ).otherwise(F.col("qend")),
-            )
-            .drop("size")
-            .where(F.col("qend") > F.col("qstart"))
-        )
-    mask = regions_df(spark, freezer)
-    gaps = intervals.missing_regions(mask, q)
-    chunks = gaps.select(
-        "bid",
-        F.explode(
-            F.sequence(
-                (F.floor(F.col("start") / chunk_size) * chunk_size).cast("long"),
-                ((F.ceil(F.col("end") / chunk_size) - 1) * chunk_size).cast(
-                    "long"
-                ),
-                F.lit(chunk_size),
-            )
-        ).alias("start"),
-    ).withColumn("end", F.col("start") + chunk_size)
-    return chunks.distinct()
-
-
 TRANSFER_LOG_DIR = "transfers"
 
 
@@ -299,42 +235,42 @@ def _write_transfer_segment(freezer_root: str, rows: list[tuple]) -> None:
     pq.write_table(table, os.path.join(path, f"{uuid.uuid4().hex}.parquet"))
 
 
-def ensure_cached(
+def plan_chunks(
+    freezer: SparseFreezer,
+    requests: Iterable[tuple[str, int, int]],
+    chunk_size: int = CHUNK_SIZE,
+    readahead: int = 0,
+) -> list[tuple[str, int]]:
+    """The fetch plan, driver-side: chunk-align each (bid, qstart, qend)
+    request (R5) after extending it by the readahead window, take its
+    gaps against the cached mask (R1), and expand the gaps to a
+    deduplicated, sorted list of (bid, chunk_start) pairs (T2
+    coalescing: overlapping requests share chunks)."""
+    chunks: set[tuple[str, int]] = set()
+    for bid, qstart, qend in requests:
+        start = (qstart // chunk_size) * chunk_size
+        end = -(-(qend + readahead) // chunk_size) * chunk_size
+        for s, e in freezer.missing(bid, start, end):
+            first = (s // chunk_size) * chunk_size
+            chunks.update((bid, c) for c in range(first, e, chunk_size))
+    return sorted(chunks)
+
+
+def _fetch_missing(
     spark: SparkSession,
     freezer_root: str,
     remote_factory,
-    requests: DataFrame,
-    chunk_size: int = CHUNK_SIZE,
-    readahead: int = 0,
-    sizes: DataFrame | None = None,
-    telemetry: bool = True,
+    requests: Iterable[tuple[str, int, int]],
+    chunk_size: int,
+    readahead: int,
 ) -> dict:
-    """T1 distributed: materialize every missing chunk of the requested
-    (bid, qstart, qend) ranges into the sparse cache. Fetches run
-    executor-side (mapPartitions, one remote connection per partition);
-    short remote reads self-clamp at end-of-block. Idempotent: re-runs
-    fetch nothing. Each fetch task also appends a telemetry segment
-    (bid, ts, offset, bytes, latency) to <root>/transfers — the
-    producer behind the T5/T6 monitoring queries (see transfer_events;
-    reference: core/freezer.go:241-288). Returns {'chunks_fetched',
-    'bytes_fetched'}."""
-    freezer = SparseFreezer(freezer_root)
-    # Driver fast-path: a hot read's request set is tiny; if every
-    # requested range is already covered, answer without a Spark job
-    # (the reference's in-memory mask check, core/freezer.go:602-612).
-    head = requests.select("bid", "qstart", "qend").limit(1001).collect()
-    if len(head) <= 1000:
-        covered = all(
-            not freezer.missing(
-                r["bid"],
-                (r["qstart"] // chunk_size) * chunk_size,
-                -(-(r["qend"] + readahead) // chunk_size) * chunk_size,
-            )
-            for r in head
-        )
-        if covered:
-            return {"chunks_fetched": 0, "bytes_fetched": 0}
-    plan = plan_fetches(spark, freezer, requests, chunk_size, readahead, sizes)
+    """Plan ``requests`` on the driver and fetch the missing chunks in
+    one executor-side job; no job at all when nothing is missing."""
+    chunks = plan_chunks(
+        SparseFreezer(freezer_root), requests, chunk_size, readahead
+    )
+    if not chunks:
+        return {"chunks_fetched": 0, "bytes_fetched": 0}
 
     def fetch(rows):
         import time as _time
@@ -343,33 +279,58 @@ def ensure_cached(
         fz = SparseFreezer(freezer_root)
         n = b = 0
         events = []
-        for row in rows:
+        for bid, start in rows:
+            end = start + chunk_size
             t0 = _time.monotonic()
-            data = remote.read_block(row["bid"], row["start"], row["end"] - row["start"])
+            data = remote.read_block(bid, start, chunk_size)
             lat_ms = (_time.monotonic() - t0) * 1000.0
-            fz.commit_chunk(row["bid"], row["start"], row["end"], data)
+            fz.commit_chunk(bid, start, end, data)
             n += 1
             b += len(data)
-            if telemetry:
-                events.append(
-                    (
-                        row["bid"],
-                        int(_time.time() * 1_000_000),
-                        row["start"],
-                        row["end"],
-                        len(data),
-                        lat_ms,
-                    )
-                )
+            events.append(
+                (bid, int(_time.time() * 1_000_000), start, end, len(data), lat_ms)
+            )
         if events:
             _write_transfer_segment(freezer_root, events)
         yield (n, b)
 
-    stats = plan.rdd.mapPartitions(fetch).collect()
+    sc = spark.sparkContext
+    stats = (
+        sc.parallelize(chunks, min(len(chunks), sc.defaultParallelism))
+        .mapPartitions(fetch)
+        .collect()
+    )
     return {
         "chunks_fetched": sum(s[0] for s in stats),
         "bytes_fetched": sum(s[1] for s in stats),
     }
+
+
+def ensure_cached(
+    spark: SparkSession,
+    freezer_root: str,
+    remote_factory,
+    requests: DataFrame,
+    chunk_size: int = CHUNK_SIZE,
+    readahead: int = 0,
+) -> dict:
+    """T1 distributed: materialize every missing chunk of the requested
+    (bid, qstart, qend) ranges into the sparse cache. The requests are
+    collected once and planned on the driver against the region mask
+    (``plan_chunks``); the missing chunks are fetched on executors
+    (mapPartitions, one remote connection per partition). Short remote
+    reads self-clamp at end-of-block (``commit_chunk``). Idempotent: a
+    re-run plans no chunks and starts no fetch job. Each fetch task
+    also appends a telemetry segment (bid, ts, offset, bytes, latency)
+    to <root>/transfers — the producer behind the T5/T6 monitoring
+    queries (see transfer_events; reference:
+    core/freezer.go:241-288). Returns {'chunks_fetched',
+    'bytes_fetched'}."""
+    rows = requests.select("bid", "qstart", "qend").collect()
+    return _fetch_missing(
+        spark, freezer_root, remote_factory, [tuple(r) for r in rows],
+        chunk_size, readahead,
+    )
 
 
 def stream_ensure_cached(
@@ -382,8 +343,8 @@ def stream_ensure_cached(
 ):
     """T1/T2 live: a Structured Streaming source of read requests
     (bid, qstart, qend) drives the chunk-fetch job per micro-batch via
-    foreachBatch. Within a batch, coalescing happens in the fetch plan
-    (chunk dedup); across batches, the region mask makes re-requests
+    foreachBatch. Within a batch, coalescing happens in the driver-side
+    plan (chunk dedup); across batches, the region mask makes re-requests
     no-ops — the streaming equivalent of the reference's background
     copier joining outstanding requests. Returns the started query;
     caller awaits/stops it."""
@@ -419,12 +380,12 @@ def read_through(
     readahead: int = READAHEAD,
 ) -> bytes:
     """S7 convenience: ensure the range is cached (with readahead) then
-    serve the exact bytes from the sparse file."""
-    requests = spark.createDataFrame(
-        [(bid, start, start + length)], "bid string, qstart long, qend long"
-    )
-    ensure_cached(
-        spark, freezer_root, remote_factory, requests, chunk_size, readahead
+    serve the exact bytes from the sparse file. The single range goes
+    straight to the driver-side planner, so a cached range starts no
+    Spark job."""
+    _fetch_missing(
+        spark, freezer_root, remote_factory, [(bid, start, start + length)],
+        chunk_size, readahead,
     )
     # the fetch logged full chunks, so the range is gap-free; the file
     # read itself clamps at end-of-block

@@ -145,6 +145,25 @@ def test_push_mount_round_trip(tmp_path):
     assert names == ["dir", "top"]
 
 
+def test_tampered_remote_block_raises_typed_error(tmp_path):
+    """A remote serving bytes that do not hash to the requested bid is
+    refused with a typed error (an ``assert`` vanishes under ``-O`` and
+    would return the tampered bytes), and the bid is not recorded as
+    present on the remote."""
+    remote = MemRemote()
+    a = DataStore(str(tmp_path / "A"), remote=remote)
+    f = write_file(a, ROOT_INODE, "f", b"genuine payload")
+    a.push("lbl")
+    bid = a.get_node(f).bid
+    remote.blocks[bid] = b"tampered payload"
+
+    b = DataStore(str(tmp_path / "B"), remote=remote)
+    b.mount_by_label(ROOT_INODE, "m", "lbl")
+    with pytest.raises(E.BlockHashMismatchError):
+        b.read_path("/m/f")
+    assert bid not in b.pushed
+
+
 def test_mount_requires_empty_dir(tmp_path):
     remote = MemRemote()
     a = DataStore(str(tmp_path / "A"), remote=remote)

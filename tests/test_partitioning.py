@@ -111,63 +111,36 @@ def test_spread_for_compute_by_key_skips_payload_sort(spark):
     assert len(got) == 64 and got[3] == b"x3" * 200
 
 
-def test_estimated_scan_partitions_matches_exact_probe(spark, tmp_path):
-    """r15: spread_for_compute gates on a file-size ESTIMATE instead of
-    .rdd.getNumPartitions() (which costs a physical plan per call). The
-    estimate must agree with the exact probe on the frames that matter:
-    (a) a narrow scan-rooted frame (estimator path — no physical
-    planning), and (b) a frame with an explicit repartition, where the
-    file arithmetic is invalid and the fallback must return the
-    repartition's count (the r15 streaming-gate pin caught a double
-    exchange here)."""
+def test_spread_for_compute_spreads_scan_rooted_frames(spark, tmp_path):
+    """The regime the spread exists for: a small single-file parquet
+    scan arrives as ONE split, so spread_for_compute must repartition
+    it to defaultParallelism with identical rows, whether the scan is
+    bare or shaped by a limit, sample, union or an oddly named column.
+    A frame already repartitioned to at least defaultParallelism is
+    returned untouched."""
     import pandas as pd
 
-    from pufs_spark.operators.util import _estimated_scan_partitions
+    from pufs_spark.operators.util import spread_for_compute
 
-    src = str(tmp_path / "small")
+    par = spark.sparkContext.defaultParallelism
+    src = str(tmp_path / "small.parquet")
     pd.DataFrame({"id": range(100), "text": ["x"] * 100}).to_parquet(
-        src + ".parquet", index=False
+        src, index=False
     )
-    scan = spark.read.parquet(src + ".parquet").select("id", "text")
-    # (a) narrow scan: small single file -> both say 1 split
-    assert _estimated_scan_partitions(scan) == scan.rdd.getNumPartitions() == 1
-    # (b) repartitioned frame: fallback must see the explicit count,
-    #     not the file bytes
-    rep = scan.repartition(7)
-    assert _estimated_scan_partitions(rep) == 7
-    # (c) non-file frame: falls back to the exact probe
-    rng = spark.range(10).coalesce(2)
-    assert _estimated_scan_partitions(rng) == 2
-
-
-def test_estimated_scan_partitions_limit_sample_union(spark, tmp_path):
-    """VERDICT r15 #9 / ADVICE: the r15 substring denylist missed
-    GlobalLimit/Sample/Union-shaped plans (a limit collapses to ~1
-    partition at execution, so the file arithmetic over-estimates and
-    the spread gate would SKIP a needed repartition). The node-name
-    allowlist must route all three to the exact probe."""
-    import pandas as pd
-
-    from pufs_spark.operators.util import _estimated_scan_partitions
-
-    src = str(tmp_path / "lsu")
-    pd.DataFrame({"id": range(100), "text": ["x"] * 100}).to_parquet(
-        src + ".parquet", index=False
-    )
-    scan = spark.read.parquet(src + ".parquet").select("id", "text")
+    scan = spark.read.parquet(src).select("id", "text")
+    assert scan.rdd.getNumPartitions() == 1
     for shaped in (
+        scan,
         scan.limit(5),
         scan.sample(fraction=0.5, seed=7),
         scan.union(scan),
+        scan.select(F.col("id").alias("SortOrderJoin"), "text"),
     ):
-        assert (
-            _estimated_scan_partitions(shaped)
-            == shaped.rdd.getNumPartitions()
-        ), shaped._jdf.queryExecution().analyzed().toString()
-    # and a column literally NAMED like a denylist word must not kick
-    # a plain scan off the estimator path (the r15 false-positive)
-    sortish = scan.select(F.col("id").alias("SortOrderJoin"), "text")
-    assert _estimated_scan_partitions(sortish) == 1
+        out = spread_for_compute(shaped)
+        assert out.rdd.getNumPartitions() == par
+        assert sorted(out.collect()) == sorted(shaped.collect())
+    rep = scan.repartition(par + 1)
+    assert spread_for_compute(rep) is rep
 
 
 def test_load_table_memoizes_handle_per_session(spark):

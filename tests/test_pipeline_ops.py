@@ -45,6 +45,17 @@ def test_lang_id_deterministic(spark, docs):
     assert langs <= set(text.STOPWORDS) | {"und"}
 
 
+def test_lang_id_refuses_working_column_collision(spark):
+    """An input that already carries lang_id's working column would be
+    silently overwritten; the guard raises ValueError (not an
+    ``assert``, which ``-O`` strips)."""
+    df = spark.createDataFrame(
+        [(1, "the cat", "x")], "doc_id long, text string, __pufs_toks string"
+    )
+    with pytest.raises(ValueError, match="__pufs_toks"):
+        text.lang_id(df)
+
+
 def test_fingerprint_collapses_formatting(spark):
     df = spark.createDataFrame(
         [(1, "Hello,   World!"), (2, "hello world"), (3, "different")],

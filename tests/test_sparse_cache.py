@@ -6,6 +6,8 @@ region/pending.go:281-299)."""
 from __future__ import annotations
 
 import os
+import random
+import uuid
 
 import pytest
 
@@ -14,8 +16,8 @@ from pufs_spark.sources.remote import MemRemote
 
 
 class CountingRemote:
-    """Wraps a remote, counting bytes served — the read-accounting
-    oracle for zero-re-read assertions."""
+    """Wraps a remote, logging every read (bid, offset, bytes served) —
+    the read-accounting oracle for zero-re-read assertions."""
 
     def __init__(self, inner, counter_path: str):
         self.inner = inner
@@ -24,7 +26,7 @@ class CountingRemote:
     def read_block(self, bid, offset, length):
         data = self.inner.read_block(bid, offset, length)
         with open(self.counter_path, "a") as f:
-            f.write(f"{len(data)}\n")
+            f.write(f"{bid} {offset} {len(data)}\n")
         return data
 
 
@@ -32,7 +34,38 @@ def _counted(counter_path: str) -> int:
     if not os.path.exists(counter_path):
         return 0
     with open(counter_path) as f:
-        return sum(int(line) for line in f if line.strip())
+        return sum(int(line.split()[2]) for line in f if line.strip())
+
+
+def _reads(counter_path: str) -> list[tuple[str, int]]:
+    """Every (bid, offset) the remote served, in log order."""
+    if not os.path.exists(counter_path):
+        return []
+    with open(counter_path) as f:
+        return [
+            (bid, int(off)) for bid, off, _ in (ln.split() for ln in f if ln.strip())
+        ]
+
+
+def _count_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, #Spark jobs)."""
+    sc = spark.sparkContext
+    group = f"sparse-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _chunk_union(reqs, chunk: int) -> set[tuple[str, int]]:
+    """Chunk starts covered by the chunk-aligned requests."""
+    return {
+        (bid, c)
+        for bid, qs, qe in reqs
+        for c in range((qs // chunk) * chunk, qe, chunk)
+    }
 
 
 CHUNK = 1024  # small chunk for tests (reference default is 200KB)
@@ -267,3 +300,73 @@ def test_transfer_telemetry_lands(spark, tmp_path, remote_with_block):
         spark, root, _factory(remote, counter), reqs, chunk_size=CHUNK
     )
     assert sparse.transfer_events(spark, root).count() == len(rows)
+
+
+def test_warm_read_through_runs_no_job(spark, tmp_path, remote_with_block):
+    """A cached range is answered from the driver-side mask check
+    (reference core/freezer.go:602-612): no Spark job, no remote read."""
+    remote, data, counter = remote_with_block
+    root = str(tmp_path / "cache")
+    factory = _factory(remote, counter)
+    sparse.read_through(spark, root, factory, "blk1", 100, 3000,
+                        chunk_size=CHUNK, readahead=0)
+    before = _counted(counter)
+    got, jobs = _count_jobs(spark, lambda: sparse.read_through(
+        spark, root, factory, "blk1", 200, 2000, chunk_size=CHUNK, readahead=0))
+    assert got == data[200:2200]
+    assert jobs == 0
+    assert _counted(counter) == before
+
+
+def test_cold_batch_jobs_and_single_fetch_per_chunk(
+    spark, tmp_path, remote_with_block
+):
+    """A cold batch collects its requests and runs one fetch job; each
+    chunk of the chunk-aligned union is read from the remote once."""
+    remote, data, counter = remote_with_block
+    root = str(tmp_path / "cache")
+    raw = [("blk1", 0, 3000), ("blk1", 2500, 5000), ("blk1", 100, 200)] * 4
+    reqs = spark.createDataFrame(raw, "bid string, qstart long, qend long")
+    stats, jobs = _count_jobs(spark, lambda: sparse.ensure_cached(
+        spark, root, _factory(remote, counter), reqs, chunk_size=CHUNK))
+    assert jobs <= 2
+    want = _chunk_union(raw, CHUNK)
+    assert sorted(_reads(counter)) == sorted(want)  # every chunk once, no others
+    assert stats == {"chunks_fetched": len(want), "bytes_fetched": len(want) * CHUNK}
+
+
+def test_large_batch_fetches_exact_chunk_union(spark, tmp_path):
+    """1500 requests (above any small-batch special case) over two
+    blocks: the fetch is exactly the chunk-aligned union of the
+    requests, each chunk read once, in at most two jobs; a repeat
+    fetches nothing and runs no fetch job."""
+    nchunks = 2048
+    remote = MemRemote()
+    for i, bid in enumerate(("big1", "big2")):
+        remote.blocks[bid] = bytes((j + i) % 253 for j in range(nchunks * CHUNK))
+    counter = str(tmp_path / "counter")
+    rng = random.Random(1500)
+    raw = []
+    for _ in range(1500):
+        bid = rng.choice(("big1", "big2"))
+        qs = rng.randrange(nchunks * CHUNK - 2 * CHUNK)
+        raw.append((bid, qs, qs + rng.randint(1, 2 * CHUNK)))
+    reqs = spark.createDataFrame(raw, "bid string, qstart long, qend long")
+    root = str(tmp_path / "cache")
+    factory = _factory(remote, counter)
+
+    stats, jobs = _count_jobs(spark, lambda: sparse.ensure_cached(
+        spark, root, factory, reqs, chunk_size=CHUNK))
+    want = _chunk_union(raw, CHUNK)
+    assert len(want) < 2 * nchunks  # a sparse union, not whole blocks
+    assert sorted(_reads(counter)) == sorted(want)
+    assert stats == {"chunks_fetched": len(want), "bytes_fetched": len(want) * CHUNK}
+    assert jobs <= 2
+
+    again, jobs = _count_jobs(spark, lambda: sparse.ensure_cached(
+        spark, root, factory, reqs, chunk_size=CHUNK))
+    assert again == {"chunks_fetched": 0, "bytes_fetched": 0}
+    assert jobs <= 1  # collecting the requests, no fetch job
+    fz = sparse.SparseFreezer(root)
+    for bid, qs, qe in raw[:50]:
+        assert fz.read(bid, qs, qe - qs) == remote.blocks[bid][qs:qe]
