@@ -111,13 +111,13 @@ def test_spread_for_compute_by_key_skips_payload_sort(spark):
     assert len(got) == 64 and got[3] == b"x3" * 200
 
 
-def test_spread_for_compute_spreads_scan_rooted_frames(spark, tmp_path):
-    """The regime the spread exists for: a small single-file parquet
-    scan arrives as ONE split, so spread_for_compute must repartition
-    it to defaultParallelism with identical rows, whether the scan is
-    bare or shaped by a limit, sample, union or an oddly named column.
-    A frame already repartitioned to at least defaultParallelism is
-    returned untouched."""
+def test_estimated_scan_partitions_matches_exact_probe(spark, tmp_path):
+    """spread_for_compute gates on the exact partition count
+    (``.rdd.getNumPartitions()``), not a file-size estimate. A small
+    single-file parquet scan arrives as ONE split and must be spread to
+    defaultParallelism with identical rows; a frame already
+    repartitioned to at least defaultParallelism is returned untouched;
+    a non-file frame below parallelism is spread too."""
     import pandas as pd
 
     from pufs_spark.operators.util import spread_for_compute
@@ -128,19 +128,47 @@ def test_spread_for_compute_spreads_scan_rooted_frames(spark, tmp_path):
         src, index=False
     )
     scan = spark.read.parquet(src).select("id", "text")
+    # (a) narrow scan: one split in, defaultParallelism out
     assert scan.rdd.getNumPartitions() == 1
+    out = spread_for_compute(scan)
+    assert out.rdd.getNumPartitions() == par
+    assert sorted(out.collect()) == sorted(scan.collect())
+    # (b) explicit repartition at or above parallelism: untouched
+    rep = scan.repartition(par + 1)
+    assert spread_for_compute(rep) is rep
+    # (c) non-file frame below parallelism: spread
+    rng = spark.range(10).coalesce(2)
+    assert rng.rdd.getNumPartitions() == 2 < par
+    out = spread_for_compute(rng)
+    assert out.rdd.getNumPartitions() == par
+    assert sorted(out.collect()) == sorted(rng.collect())
+
+
+def test_estimated_scan_partitions_limit_sample_union(spark, tmp_path):
+    """A limit, sample or union over a one-split scan, and a scan with
+    a column oddly named like a plan node, all still arrive below
+    parallelism; spread_for_compute must spread each of them to
+    defaultParallelism with identical rows."""
+    import pandas as pd
+
+    from pufs_spark.operators.util import spread_for_compute
+
+    par = spark.sparkContext.defaultParallelism
+    src = str(tmp_path / "lsu.parquet")
+    pd.DataFrame({"id": range(100), "text": ["x"] * 100}).to_parquet(
+        src, index=False
+    )
+    scan = spark.read.parquet(src).select("id", "text")
     for shaped in (
-        scan,
         scan.limit(5),
         scan.sample(fraction=0.5, seed=7),
         scan.union(scan),
         scan.select(F.col("id").alias("SortOrderJoin"), "text"),
     ):
+        assert shaped.rdd.getNumPartitions() < par
         out = spread_for_compute(shaped)
         assert out.rdd.getNumPartitions() == par
         assert sorted(out.collect()) == sorted(shaped.collect())
-    rep = scan.repartition(par + 1)
-    assert spread_for_compute(rep) is rep
 
 
 def test_load_table_memoizes_handle_per_session(spark):
