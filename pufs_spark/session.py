@@ -11,23 +11,31 @@ import os
 from pyspark.sql import SparkSession
 
 
+def mem_total_gib() -> float | None:
+    """The host's MemTotal in GiB, or None where /proc/meminfo is
+    missing (it is Linux-only)."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) / (1024 * 1024)
+    except OSError:
+        pass
+    return None
+
+
 def _default_driver_mem() -> str:
     """Local-JVM heap default: ``min(32g, ~70% of MemTotal)``, floor 2g.
 
     32g is the target on bench-class boxes (a cluster executor's
     share); 70% leaves the OS, the Python workers (one per core), and
     Arrow transfer buffers headroom so the heap never races the
-    OOM-killer on small hosts. /proc/meminfo is Linux-only — any
-    failure falls back to the conservative pre-r12 8g."""
-    try:
-        with open("/proc/meminfo") as fh:
-            for line in fh:
-                if line.startswith("MemTotal:"):
-                    total_gib = int(line.split()[1]) / (1024 * 1024)
-                    return f"{max(2, min(32, int(total_gib * 0.7)))}g"
-    except OSError:
-        pass
-    return "8g"
+    OOM-killer on small hosts. Without /proc/meminfo it falls back to
+    the conservative pre-r12 8g."""
+    total_gib = mem_total_gib()
+    if total_gib is None:
+        return "8g"
+    return f"{max(2, min(32, int(total_gib * 0.7)))}g"
 
 
 def _initial_shuffle_partitions(
@@ -184,9 +192,6 @@ def _ship_package(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_pufs_pkg_shipped", False):
         return
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
     # The zip lives inside a PRIVATE per-process directory (mkdtemp,
     # mode 0700), not at a predictable path directly in the shared temp
     # dir: a fixed world-guessable name is an insecure temp file
@@ -194,19 +199,15 @@ def _ship_package(spark: SparkSession) -> None:
     # retain write access to code that executors will import). The dir
     # is created once per process and reused by later SparkContexts in
     # the same process (executors fetch the zip from its original path
-    # lazily, so it must outlive the context; one dir per process caps
-    # the footprint at a single file, rewritten in place on re-ship).
+    # lazily, so it must outlive the context). The zip is named by a
+    # hash of its contents: Spark refuses to add a file whose name it
+    # already holds with other contents ("exists and does not match
+    # contents"), and every later task of the context then fails. An
+    # unchanged package re-ships as the same single file; an edited one
+    # gets a new file beside the old, which executors may still fetch.
     # atexit removes the dir on clean exit; SIGKILL'ed drivers can't
     # run atexit, so every ship also reaps siblings whose pid is dead.
-    zip_path = _package_zip_path()
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_STORED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for name in files:
-                if not name.endswith(".py"):
-                    continue
-                full = os.path.join(root, name)
-                rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                zf.write(full, rel)
+    zip_path = _package_zip_path(_zip_package(_PKG_SRC))
     sc.addPyFile(zip_path)
     # Spark 4.1's STREAMING Python planner (python_streaming_source_
     # runner, which unpickles the pufs_commits DataSource) resolves its
@@ -231,11 +232,34 @@ def _ship_package(spark: SparkSession) -> None:
 
 
 _PKG_PREFIX = "pufs_spark_pkg_"
+_PKG_SRC = os.path.dirname(os.path.abspath(__file__))
 _pkg_dir: str | None = None
 
 
-def _package_zip_path() -> str:
-    """Return the per-process package-zip path, creating its private dir.
+def _zip_package(pkg_dir: str) -> bytes:
+    """The package's ``.py`` files as an uncompressed zip, in sorted
+    order and with a fixed timestamp, so equal sources give equal
+    bytes."""
+    import io
+    import zipfile
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as zf:
+        for root, dirs, files in os.walk(pkg_dir):
+            dirs.sort()
+            for name in sorted(files):
+                if not name.endswith(".py"):
+                    continue
+                full = os.path.join(root, name)
+                rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+                with open(full, "rb") as fh:
+                    zf.writestr(zipfile.ZipInfo(rel), fh.read())
+    return buf.getvalue()
+
+
+def _package_zip_path(data: bytes) -> str:
+    """Write ``data`` into the per-process private dir under a name
+    that carries its SHA-256, creating the dir, and return the path.
 
     Directory name embeds ``<uid>_<pid>`` so crashed-driver leftovers are
     attributable: :func:`_reap_dead_pkg_dirs` removes any sibling whose
@@ -244,6 +268,7 @@ def _package_zip_path() -> str:
     cover — SIGKILL / OOM-killed drivers."""
     global _pkg_dir
     import atexit
+    import hashlib
     import shutil
     import tempfile
 
@@ -257,9 +282,15 @@ def _package_zip_path() -> str:
     # Basename keeps the <uid>_<pid> tag: it is what executors see under
     # their userFiles dir, and the streaming-planner mirror copies it by
     # basename, so an attributable name aids debugging on real clusters.
-    return os.path.join(
-        _pkg_dir, f"{_PKG_PREFIX}{os.getuid()}_{os.getpid()}.zip"
+    digest = hashlib.sha256(data).hexdigest()[:16]
+    path = os.path.join(
+        _pkg_dir, f"{_PKG_PREFIX}{os.getuid()}_{os.getpid()}_{digest}.zip"
     )
+    if not os.path.exists(path):
+        with open(path + ".part", "wb") as fh:
+            fh.write(data)
+        os.replace(path + ".part", path)
+    return path
 
 
 def _reap_dead_pkg_dirs(tmp: str) -> None:

@@ -10,7 +10,7 @@ Usage:
           .option("cas", "/path/to/freezer/chunks")        # CAS dir
           .option("path", "/subtree")                      # optional filter
           .load())
-    # → (path, inode, size, bid), one partition per file batch —
+    # → (path, inode, size, bid), one partition per core —
     # METADATA ONLY by default; add .option("content", "true") for a
     # fifth `content binary` column read from the CAS.
 
@@ -20,10 +20,18 @@ the reference's path-resolution loop done once at export). Partition
 planning is two-tier and starts from parquet METADATA only: row groups
 are pruned by min/max stats (subtree prefix + pushed filters), then
 file rows materialize on the driver only while they fit
-``maxdriverrows`` (default 4M ≈ 400 MB); past that — a full-lake scan
-of a 10⁸-file catalog — partitions are row-group RANGES and each task
-reads + filters its own file list, keeping the driver O(row groups)
-at any catalog size (see ``PufsReader.partitions``). Executors open
+``maxdriverrows`` (default 4M ≈ 400 MB). Those rows are cut, in path
+order, into one partition per core, or one per 128 MiB of content
+when that is more (``pack_rows``), with about equal bytes in each.
+The count is kept that low because every Python task pays a fixed
+start-up cost before it reads a row: about 0.2–0.3 CPU s on a 4-core
+host, most of it ``importlib.invalidate_caches()`` re-reading every zip
+on the worker's ``sys.path``. A 2000-file content scan cost 9.7–11.6
+CPU s as 32 tasks of 64 files and 1.9–2.4 s as 4 tasks. Past
+``maxdriverrows`` — a full-lake scan of a 10⁸-file catalog —
+partitions are row-group RANGES and each task reads + filters its own
+file list, keeping the driver O(row groups) at any catalog size (see
+``PufsReader.partitions``). Executors open
 CAS blocks directly, so a scan of any tree fans out without the
 driver touching a single data byte. With ``.option("pushdown",
 "true")``, filters on the metadata columns push down into partition
@@ -60,6 +68,8 @@ becomes a DataFrame call over the wire, no bespoke service code):
 
 from __future__ import annotations
 
+import bisect
+import itertools
 import os
 
 from pyspark.sql.datasource import (
@@ -76,6 +86,10 @@ from pyspark.sql.datasource import (
 
 META_SCHEMA = "path string, inode long, size long, bid string"
 SCHEMA = META_SCHEMA + ", content binary"
+
+# Spark's default spark.sql.files.maxPartitionBytes: a content scan
+# gets one partition per this many bytes once that exceeds the cores.
+MAX_PARTITION_BYTES = 128 << 20
 
 # Metadata columns a filter can be evaluated on DRIVER-SIDE during
 # partition planning (everything but `content`, which only exists after
@@ -113,6 +127,33 @@ def _str_succ(s: str) -> str | None:
             return "".join(b)
         b.pop()
     return None
+
+
+def pack_rows(rows: list, cores: int, content: bool) -> list[list]:
+    """Cut path-ordered file rows into ``n`` contiguous partitions of
+    about equal weight, where ``n = min(files, max(cores,
+    ceil(content_bytes / MAX_PARTITION_BYTES)))``.
+
+    A content scan weighs each row by its ``size`` (row[2]); a
+    metadata-only scan reads no content, so its bytes count as 0 and
+    every row weighs the same (as do files when all are empty). Cut
+    ``k`` falls just after the first row whose running weight reaches
+    ``k/n`` of the total, moved only as far as it takes to leave every
+    partition one row, so no partition holds more than
+    ``ceil(total / n)`` plus its largest file."""
+    if not rows:
+        return []
+    sizes = [r[2] for r in rows] if content else []
+    total = sum(sizes)
+    n = min(len(rows), max(cores, -(-total // MAX_PARTITION_BYTES)))
+    weights = sizes if total else [1] * len(rows)
+    run = list(itertools.accumulate(weights, initial=0))
+    cuts = [0]
+    for k in range(1, n):
+        at = bisect.bisect_left(run, -(-k * run[-1] // n))
+        cuts.append(min(max(at, cuts[-1] + 1), len(rows) - (n - k)))
+    cuts.append(len(rows))
+    return [rows[a:b] for a, b in zip(cuts, cuts[1:])]
 
 
 class PufsDataSource(DataSource):
@@ -153,7 +194,6 @@ class PufsReader(DataSourceReader):
             raise ValueError(
                 "pufs: content=true requires .option('cas', <chunks dir>)"
             )
-        self.files_per_partition = int(options.get("filesperpartition", 64))
         # Driver-side planning bound (r11 verdict What's-wrong #1):
         # above this many catalog rows surviving row-group pruning, the
         # planner stops materializing file rows on the driver (~100 B
@@ -282,12 +322,19 @@ class PufsReader(DataSourceReader):
            a single data byte is read (export_catalog writes in DFS
            order, so subtrees are contiguous and path stats are tight).
         2. Materialization bound: if the surviving groups hold at most
-           ``maxdriverrows`` rows, file rows are materialized and
-           packed ``filesperpartition`` per partition (exact pruning,
-           best for point/subtree reads). Past the bound — a full-lake
-           scan of a 10^8-file catalog — partitions become row-group
-           RANGES and each task reads + filters its own slice: driver
-           memory stays O(row groups) no matter the catalog size."""
+           ``maxdriverrows`` rows, file rows are materialized (exact
+           pruning, best for point/subtree reads) and cut in path order
+           into ``min(files, max(cores, ceil(content_bytes / 128 MiB)))``
+           partitions of about equal bytes (``pack_rows``). ``cores``
+           is ``os.cpu_count()`` of this planning process: Spark hands
+           the Python planner no session parallelism, and in local mode
+           the host's count is the session's. The count stays at the
+           cores because each Python task costs a fixed ~0.2–0.3 CPU s
+           to start, whatever it reads; ``content_bytes`` is 0 for a
+           metadata-only scan. Past the bound — a full-lake scan of a
+           10^8-file catalog — partitions become row-group RANGES and
+           each task reads + filters its own slice: driver memory stays
+           O(row groups) no matter the catalog size."""
         import pyarrow.parquet as pq
 
         pf = pq.ParquetFile(self.catalog)
@@ -312,11 +359,10 @@ class PufsReader(DataSourceReader):
         if est <= self.max_driver_rows:
             rows = sorted(self._file_rows(pf, kept))
             self.plan_stats["driver_rows"] = len(rows)
-            n = self.files_per_partition
-            return [
-                PufsFilePartition(rows[i : i + n])
-                for i in range(0, len(rows), n)
-            ] or [PufsFilePartition([])]
+            parts = pack_rows(rows, os.cpu_count() or 1, self.want_content)
+            return [PufsFilePartition(p) for p in parts] or [
+                PufsFilePartition([])
+            ]
         self.plan_stats["mode"] = "rowgroups"
         parts: list[InputPartition] = []
         for i in kept:

@@ -3,7 +3,9 @@
 from __future__ import annotations
 
 import os
+import weakref
 
+from py4j.java_gateway import JavaObject
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,26 +41,37 @@ _NANOS_TS_COLUMNS = {
 # A real service resolves a table reference once per session; the memo
 # does the same for the immutable driver testdata. No persist() — the
 # scan still reads parquet every execution; only the plan handle is
-# reused. Keyed per session (dead-session entries evicted like
-# _FS_MEMO); PUFS_ENTRY_CACHE=0 disables, matching the entry's memo
-# switch (plan-assert tests run cold).
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+# reused. PUFS_ENTRY_CACHE=0 disables, matching the entry's memo switch
+# (plan-assert tests run cold).
+#
+# Keyed weakly by the session object: spark.newSession() shares the
+# SparkContext but not SQL-conf state, so a handle bound to one session
+# must not be served to another, and an id() key could be recycled by a
+# later session. An entry holds the JVM Dataset strongly and its
+# DataFrame only weakly, because a DataFrame refers to its session and
+# would keep the weak key alive for good: a hit returns the same
+# DataFrame while any caller still holds it and re-wraps the Dataset
+# otherwise, and a collected session's entries go with it.
+_TABLE_MEMO: weakref.WeakKeyDictionary[
+    SparkSession,
+    dict[tuple[str, str], tuple[JavaObject, weakref.ref[DataFrame]]],
+] = weakref.WeakKeyDictionary()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if os.environ.get("PUFS_ENTRY_CACHE", "1") != "1":
         return _load_table_uncached(spark, sf_dir, name)
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _TABLE_MEMO if k[0] != app_id]:
-        _TABLE_MEMO.pop(k, None)
-    # id(spark) in the key (ADVICE r15): spark.newSession() shares the
-    # applicationId but not SQL-conf state — a handle bound to another
-    # session of the same app must not be served across sessions.
-    key = (app_id, id(spark), os.path.abspath(sf_dir), name)
-    df = _TABLE_MEMO.get(key)
+    memo = _TABLE_MEMO.setdefault(spark, {})
+    key = (os.path.abspath(sf_dir), name)
+    hit = memo.get(key)
+    df = hit[1]() if hit else None
     if df is None:
-        df = _load_table_uncached(spark, sf_dir, name)
-        _TABLE_MEMO[key] = df
+        df = (
+            DataFrame(hit[0], spark)
+            if hit
+            else _load_table_uncached(spark, sf_dir, name)
+        )
+        memo[key] = (df._jdf, weakref.ref(df))
     return df
 
 

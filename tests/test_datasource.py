@@ -61,12 +61,83 @@ def test_subtree_filter_and_partitioning(spark, tmp_path):
         .option("catalog", cat)
         .option("cas", ds.freezer.chunks_dir)
         .option("path", "/d2")
-        .option("filesperpartition", 2)
         .load()
     )
     got = sorted(r["path"] for r in df.collect())
-    assert got == sorted(p for p in contents if p.startswith("/d2/"))
-    assert df.rdd.getNumPartitions() == 2  # 4 files / 2 per partition
+    want = sorted(p for p in contents if p.startswith("/d2/"))
+    assert got == want
+    # a few KB of content: one partition per core, capped by the files
+    assert df.rdd.getNumPartitions() == min(len(want), os.cpu_count())
+
+
+def _file_rows(sizes):
+    return [(f"/d/f{i:05d}", i, s, f"bid{i}") for i, s in enumerate(sizes)]
+
+
+_MiB = 1 << 20
+
+
+def _size_cases():
+    import random
+
+    rnd = random.Random(5)
+    yield [100] * 2000
+    yield [0] * 50
+    yield [0] * 40 + [1 << 30] + [0] * 40                 # one giant file
+    yield [rnd.randrange(1 << 20) for _ in range(777)]
+    yield [rnd.choice((0, 10, 64 * _MiB)) for _ in range(300)]  # > 128 MiB
+    yield [200 * _MiB] * 3
+    yield [7]
+
+
+@pytest.mark.parametrize("content", [False, True])
+@pytest.mark.parametrize("cores", [1, 4, 32])
+def test_pack_rows_keeps_every_row_once_in_path_order(cores, content):
+    from pufs_spark.sources.datasource import pack_rows
+
+    assert pack_rows([], cores, content) == []
+    for sizes in _size_cases():
+        rows = _file_rows(sizes)
+        parts = pack_rows(rows, cores, content)
+        assert [r for p in parts for r in p] == rows
+        assert all(parts), "empty partition"
+
+
+def test_pack_rows_partition_count_rule():
+    from pufs_spark.sources.datasource import MAX_PARTITION_BYTES, pack_rows
+
+    assert MAX_PARTITION_BYTES == 128 * _MiB
+    small = _file_rows([1000] * 2000)
+    # metadata-only or small content: one partition per core
+    assert len(pack_rows(small, 4, False)) == 4
+    assert len(pack_rows(small, 4, True)) == 4
+    # never more partitions than files
+    assert len(pack_rows(small[:3], 4, True)) == 3
+    assert len(pack_rows(small[:3], 4, False)) == 3
+    # > 128 MiB of content: one partition per 128 MiB once past the cores
+    big = _file_rows([100 * _MiB] * 20)                   # 2000 MiB
+    assert len(pack_rows(big, 4, True)) == 16             # ceil(2000/128)
+    assert len(pack_rows(big, 32, True)) == 20            # cores, capped
+    assert len(pack_rows(big, 4, False)) == 4             # bytes ignored
+    # exactly at the boundary, and one byte over it
+    assert len(pack_rows(_file_rows([MAX_PARTITION_BYTES] * 8), 4, True)) == 8
+    over = _file_rows([MAX_PARTITION_BYTES] * 8 + [1])
+    assert len(pack_rows(over, 4, True)) == 9
+
+
+@pytest.mark.parametrize("cores", [1, 3, 4, 32])
+def test_pack_rows_balances_bytes(cores):
+    from pufs_spark.sources.datasource import pack_rows
+
+    for sizes in _size_cases():
+        parts = pack_rows(_file_rows(sizes), cores, True)
+        total, n = sum(sizes), len(parts)
+        cap = -(-total // n) + max(sizes)
+        for p in parts:
+            assert sum(r[2] for r in p) <= cap, (len(sizes), cores)
+    # metadata-only: file counts differ by at most one
+    parts = pack_rows(_file_rows([0] * 2000 + [1 << 30]), 4, False)
+    assert {len(p) for p in parts} <= {500, 501}
 
 
 def test_default_scan_is_metadata_only_and_reads_zero_cas_bytes(

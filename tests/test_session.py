@@ -12,6 +12,60 @@ def test_load_all_tables(spark):
     assert dfs["lineitem"].count() > 1000
 
 
+def test_load_table_memo_is_per_session(spark, monkeypatch):
+    """Two sessions of one app (newSession shares the SparkContext, not
+    the SQL conf) get distinct handles; a repeat load in one session is
+    a memo hit: the same DataFrame while it is held, the same JVM
+    Dataset after it was dropped."""
+    from pyspark.sql.session import _monkey_patch_RDD
+
+    from pufs_spark.tables import load_table
+
+    monkeypatch.setenv("PUFS_ENTRY_CACHE", "1")
+    other = spark.newSession()
+    try:
+        a = load_table(spark, SF_DIR, "region")
+        b = load_table(other, SF_DIR, "region")
+        assert a.sparkSession is spark and b.sparkSession is other
+        assert not a._jdf.equals(b._jdf)
+        assert b._jdf.sparkSession().equals(other._jsparkSession)
+        assert load_table(spark, SF_DIR, "region") is a
+        assert load_table(other, SF_DIR, "region") is b
+        jb = b._jdf
+        del b
+        again = load_table(other, SF_DIR, "region")
+        assert again._jdf.equals(jb) and again.sparkSession is other
+        assert again.count() == 5
+    finally:
+        _monkey_patch_RDD(spark)  # newSession re-points RDD.toDF
+
+
+def test_load_table_memo_drops_collected_sessions(spark, monkeypatch):
+    """The memo holds its sessions weakly: once a session is collected
+    its entries are gone, so a later session can never be served a
+    handle bound to a dead one (an id() key could be recycled)."""
+    import gc
+    import weakref
+
+    from pyspark.sql.session import _monkey_patch_RDD
+
+    from pufs_spark import tables
+
+    monkeypatch.setenv("PUFS_ENTRY_CACHE", "1")
+    other = spark.newSession()
+    tables.load_table(other, SF_DIR, "nation")
+    assert "nation" in {name for _, name in tables._TABLE_MEMO[other]}
+    gc.collect()  # sessions earlier tests dropped leave the memo first
+    before = len(tables._TABLE_MEMO)
+    gone = weakref.ref(other)
+    del other
+    # newSession points RDD.toDF at the newest session; point it back
+    _monkey_patch_RDD(spark)
+    gc.collect()
+    assert gone() is None
+    assert len(tables._TABLE_MEMO) == before - 1
+
+
 def test_ship_package_covers_streaming_planner(spark):
     """_ship_package must land the package zip BOTH at the userFiles
     root (task workers' includes) AND under streaming_job/ — Spark
@@ -38,13 +92,19 @@ def test_ship_package_does_not_accrete_temp_zips(spark, tmp_path, monkeypatch):
     system temp dir may hold live zips from CONCURRENT drivers, which
     are not ours to count or delete — r9's flaky version globbed it).
 
-    Pins three behaviors of the ship path:
+    Pins four behaviors of the ship path:
     - the package is written inside ONE private 0700 dir per process,
-      rewritten in place on re-ship (no accretion across contexts);
+      under a name carrying a hash of its contents, and an unchanged
+      package re-ships as that same single file (no accretion across
+      contexts);
+    - a changed package re-ships under a new name, so Spark never sees
+      one file name with two contents (it refuses the second, and
+      every later task of the context fails);
     - a planted orphan from a dead pid (the SIGKILL leak atexit cannot
       cover) is reaped at ship time — both dir-style and legacy
       flat-zip-style names;
     - a live foreign driver's dir is left alone."""
+    import shutil
     import stat
     import tempfile
 
@@ -70,20 +130,49 @@ def test_ship_package_does_not_accrete_temp_zips(spark, tmp_path, monkeypatch):
     first = sess._pkg_dir
     assert first and first.startswith(str(tmp_path))
     assert stat.S_IMODE(os.stat(first).st_mode) == 0o700
-    assert os.listdir(first) == [f"pufs_spark_pkg_{uid}_{os.getpid()}.zip"]
+    shipped = os.listdir(first)
+    assert len(shipped) == 1
+    assert shipped[0].startswith(f"pufs_spark_pkg_{uid}_{os.getpid()}_")
+    assert shipped[0].endswith(".zip")
     assert not dead_dir.exists() and not dead_zip.exists(), "orphans not reaped"
     assert live_dir.exists(), "live foreign driver's dir was reaped"
 
-    # Re-ship: same dir, same single file — nothing accretes.
+    # Re-ship unchanged: same dir, same single file — nothing accretes.
     spark.sparkContext._pufs_pkg_shipped = False
     sess._ship_package(spark)
     assert sess._pkg_dir == first
+    assert os.listdir(first) == shipped
     mine = [
         n
         for n in os.listdir(tmp_path)
         if n.startswith(f"pufs_spark_pkg_{uid}_{os.getpid()}")
     ]
     assert mine == [os.path.basename(first)], f"accreted: {mine}"
+
+    # Re-ship a changed package from a new private dir (a new process
+    # dir, or a source edit in a long-lived driver): it gets a new
+    # name, so Spark does not find the first zip's name with other
+    # contents, and the session still runs Python tasks that import
+    # the package.
+    src = tmp_path / "src" / "pufs_spark"
+    shutil.copytree(
+        sess._PKG_SRC, src, ignore=shutil.ignore_patterns("__pycache__")
+    )
+    (src / "_reship_probe.py").write_text("# changes the zip's contents\n")
+    monkeypatch.setattr(sess, "_PKG_SRC", str(src))
+    monkeypatch.setattr(sess, "_pkg_dir", None)
+    spark.sparkContext._pufs_pkg_shipped = False
+    sess._ship_package(spark)
+    second = sess._pkg_dir
+    assert second != first
+    changed = os.listdir(second)
+    assert len(changed) == 1 and changed != shipped
+    got = (
+        spark.sparkContext.parallelize(range(4), 4)
+        .map(lambda _: __import__("pufs_spark.tables").__name__)
+        .collect()
+    )
+    assert got == ["pufs_spark"] * 4
 
 
 def test_initial_shuffle_partitions_scales_with_input():

@@ -22,7 +22,7 @@ from pyspark.sql import SparkSession
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from pufs_spark.session import _default_driver_mem  # noqa: E402
+from pufs_spark.session import _default_driver_mem, mem_total_gib  # noqa: E402
 from pufs_spark.tables import TPCH_TABLES  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -77,9 +77,24 @@ def compare(a: pd.DataFrame, b: pd.DataFrame) -> str | None:
     return None
 
 
+def duckdb_config() -> dict[str, str]:
+    """Cap the oracles' DuckDB at a fifth of the host's memory (1 GiB
+    floor) and keep it from spilling. The Spark JVM in the same sweep
+    takes up to 70% (``_default_driver_mem``), and DuckDB's own default
+    is 80%: at sf0.1 D1's quadratic all-pairs oracle took this process
+    to 11.6 GB on a 15 GB host and the OOM killer took the JVM, failing
+    every later entry. Capped, an oracle that needs more raises
+    DuckDB's out-of-memory error and fails alone, as its own entry."""
+    total_gib = mem_total_gib() or 8.0
+    return {
+        "memory_limit": f"{max(1024, int(total_gib * 1024 / 5))}MiB",
+        "temp_directory": "",
+    }
+
+
 def main() -> None:
     only = set(sys.argv[1:])
-    con = duckdb.connect()
+    con = duckdb.connect(config=duckdb_config())
     for t in TPCH_TABLES:
         con.sql(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
