@@ -3,14 +3,14 @@ tree (SURVEY §7.3 step 7; the reference's consumption surface is a FUSE
 mount, fs/mount.go — ours is a Spark scan).
 
 Usage:
-    from pufs_spark.sources.datasource import PufsDataSource
-    spark.dataSource.register(PufsDataSource)
+    from pufs_spark.sources.datasource import register_pufs
+    register_pufs(spark)
     df = (spark.read.format("pufs")
           .option("catalog", "/path/to/catalog.parquet")   # export_catalog
           .option("cas", "/path/to/freezer/chunks")        # CAS dir
           .option("path", "/subtree")                      # optional filter
           .load())
-    # → (path, inode, size, bid), one partition per core —
+    # → (path, inode, size, bid), one partition per task slot —
     # METADATA ONLY by default; add .option("content", "true") for a
     # fifth `content binary` column read from the CAS.
 
@@ -21,8 +21,9 @@ planning is two-tier and starts from parquet METADATA only: row groups
 are pruned by min/max stats (subtree prefix + pushed filters), then
 file rows materialize on the driver only while they fit
 ``maxdriverrows`` (default 4M ≈ 400 MB). Those rows are cut, in path
-order, into one partition per core, or one per 128 MiB of content
-when that is more (``pack_rows``), with about equal bytes in each.
+order, into one partition per task slot of the session, or one per
+128 MiB of content when that is more (``pack_rows``), with about equal
+bytes in each.
 The count is kept that low because every Python task pays a fixed
 start-up cost before it reads a row: about 0.2–0.3 CPU s on a 4-core
 host, most of it ``importlib.invalidate_caches()`` re-reading every zip
@@ -156,10 +157,32 @@ def pack_rows(rows: list, cores: int, content: bool) -> list[list]:
     return [rows[a:b] for a, b in zip(cuts, cuts[1:])]
 
 
+def register_pufs(spark) -> None:
+    """Register the ``pufs`` source on ``spark``, planning for the task
+    slots of its SparkContext (``defaultParallelism``).
+
+    Spark plans a Python data source in a worker process that has no
+    session at hand, so the count travels inside the registered class:
+    a class built in this function is pickled by value, ``cores``
+    included."""
+    slots = spark.sparkContext.defaultParallelism
+
+    class SessionPufsDataSource(PufsDataSource):
+        cores = slots
+
+    spark.dataSource.register(SessionPufsDataSource)
+
+
 class PufsDataSource(DataSource):
     """One row per frozen file under the requested path. Metadata-only
     by default; ``content=true`` adds the CAS-backed binary column
     (and is the only way any data byte is read)."""
+
+    # Task slots the driver-materialized scan plans for (see
+    # register_pufs). None, as when this class is registered directly,
+    # falls back to the planning host's core count, which matches the
+    # session only when it runs local[<host cores>].
+    cores: int | None = None
 
     @classmethod
     def name(cls) -> str:
@@ -172,13 +195,14 @@ class PufsDataSource(DataSource):
 
     def reader(self, schema):
         if self.options.get("pushdown", "false").lower() == "true":
-            return PufsPushdownReader(self.options, schema)
-        return PufsReader(self.options, schema)
+            return PufsPushdownReader(self.options, schema, self.cores)
+        return PufsReader(self.options, schema, self.cores)
 
 
 class PufsReader(DataSourceReader):
-    def __init__(self, options, schema):
+    def __init__(self, options, schema, cores: int | None = None):
         self.catalog = options["catalog"]
+        self.cores = cores or os.cpu_count() or 1
         # CAS dir only required when bytes actually come back — a
         # metadata-only scan over an exported catalog needs no CAS at
         # all (e.g. auditing a tree you can't or won't fetch).
@@ -326,11 +350,12 @@ class PufsReader(DataSourceReader):
            pruning, best for point/subtree reads) and cut in path order
            into ``min(files, max(cores, ceil(content_bytes / 128 MiB)))``
            partitions of about equal bytes (``pack_rows``). ``cores``
-           is ``os.cpu_count()`` of this planning process: Spark hands
-           the Python planner no session parallelism, and in local mode
-           the host's count is the session's. The count stays at the
-           cores because each Python task costs a fixed ~0.2–0.3 CPU s
-           to start, whatever it reads; ``content_bytes`` is 0 for a
+           is the session's ``defaultParallelism`` when the source was
+           registered through ``register_pufs``, else the planning
+           host's ``os.cpu_count()``: Spark hands the Python planner no
+           session of its own. The count stays at the cores because
+           each Python task costs a fixed ~0.2–0.3 CPU s to start,
+           whatever it reads; ``content_bytes`` is 0 for a
            metadata-only scan. Past the bound — a full-lake scan of a
            10^8-file catalog — partitions become row-group RANGES and
            each task reads + filters its own slice: driver memory stays
@@ -359,7 +384,7 @@ class PufsReader(DataSourceReader):
         if est <= self.max_driver_rows:
             rows = sorted(self._file_rows(pf, kept))
             self.plan_stats["driver_rows"] = len(rows)
-            parts = pack_rows(rows, os.cpu_count() or 1, self.want_content)
+            parts = pack_rows(rows, self.cores, self.want_content)
             return [PufsFilePartition(p) for p in parts] or [
                 PufsFilePartition([])
             ]

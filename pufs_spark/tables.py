@@ -3,9 +3,7 @@
 from __future__ import annotations
 
 import os
-import weakref
 
-from py4j.java_gateway import JavaObject
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,34 +42,20 @@ _NANOS_TS_COLUMNS = {
 # reused. PUFS_ENTRY_CACHE=0 disables, matching the entry's memo switch
 # (plan-assert tests run cold).
 #
-# Keyed weakly by the session object: spark.newSession() shares the
-# SparkContext but not SQL-conf state, so a handle bound to one session
-# must not be served to another, and an id() key could be recycled by a
-# later session. An entry holds the JVM Dataset strongly and its
-# DataFrame only weakly, because a DataFrame refers to its session and
-# would keep the weak key alive for good: a hit returns the same
-# DataFrame while any caller still holds it and re-wraps the Dataset
-# otherwise, and a collected session's entries go with it.
-_TABLE_MEMO: weakref.WeakKeyDictionary[
-    SparkSession,
-    dict[tuple[str, str], tuple[JavaObject, weakref.ref[DataFrame]]],
-] = weakref.WeakKeyDictionary()
-
-
+# The memo is a dict on the session object itself:
+# spark.newSession() shares the SparkContext but not SQL-conf state, so
+# a handle bound to one session must not be served to another, and an
+# id() key could be recycled by a later session. A dead session's
+# entries go with it: the session -> memo -> DataFrame -> session cycle
+# is collected as a whole.
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if os.environ.get("PUFS_ENTRY_CACHE", "1") != "1":
         return _load_table_uncached(spark, sf_dir, name)
-    memo = _TABLE_MEMO.setdefault(spark, {})
+    memo = vars(spark).setdefault("_pufs_table_memo", {})
     key = (os.path.abspath(sf_dir), name)
-    hit = memo.get(key)
-    df = hit[1]() if hit else None
+    df = memo.get(key)
     if df is None:
-        df = (
-            DataFrame(hit[0], spark)
-            if hit
-            else _load_table_uncached(spark, sf_dir, name)
-        )
-        memo[key] = (df._jdf, weakref.ref(df))
+        df = memo[key] = _load_table_uncached(spark, sf_dir, name)
     return df
 
 

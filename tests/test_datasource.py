@@ -12,13 +12,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from pufs_spark.catalog.datastore import ROOT_INODE, DataStore
-from pufs_spark.sources.datasource import PufsDataSource
+from pufs_spark.sources.datasource import PufsDataSource, register_pufs
 from pufs_spark.sources.remote import MemRemote
 
 
 @pytest.fixture(scope="module", autouse=True)
 def _register(spark):
-    spark.dataSource.register(PufsDataSource)
+    register_pufs(spark)
 
 
 def _build_store(tmp_path, n_dirs=5, n_files=4):
@@ -53,21 +53,37 @@ def test_scan_returns_exact_bytes(spark, tmp_path):
 
 
 def test_subtree_filter_and_partitioning(spark, tmp_path):
+    """A few KB of content plan one partition per task slot, capped by
+    the files. The planner runs in a worker with no session, so the
+    slot count travels in the registered class: register_pufs binds
+    the session's defaultParallelism, and a class carrying another
+    count plans that many partitions."""
     ds, contents = _build_store(tmp_path)
     cat = str(tmp_path / "catalog.parquet")
     ds.export_catalog(cat)
-    df = (
-        spark.read.format("pufs")
-        .option("catalog", cat)
-        .option("cas", ds.freezer.chunks_dir)
-        .option("path", "/d2")
-        .load()
-    )
-    got = sorted(r["path"] for r in df.collect())
     want = sorted(p for p in contents if p.startswith("/d2/"))
-    assert got == want
-    # a few KB of content: one partition per core, capped by the files
-    assert df.rdd.getNumPartitions() == min(len(want), os.cpu_count())
+
+    def scan():
+        df = (
+            spark.read.format("pufs")
+            .option("catalog", cat)
+            .option("cas", ds.freezer.chunks_dir)
+            .option("path", "/d2")
+            .load()
+        )
+        assert sorted(r["path"] for r in df.collect()) == want
+        return df.rdd.getNumPartitions()
+
+    assert scan() == min(len(want), spark.sparkContext.defaultParallelism)
+
+    class ThreeSlots(PufsDataSource):
+        cores = 3
+
+    spark.dataSource.register(ThreeSlots)
+    try:
+        assert scan() == 3
+    finally:
+        register_pufs(spark)
 
 
 def _file_rows(sizes):

@@ -1,4 +1,5 @@
 import os
+import sys
 
 from tests.conftest import SF_DIR
 
@@ -15,8 +16,7 @@ def test_load_all_tables(spark):
 def test_load_table_memo_is_per_session(spark, monkeypatch):
     """Two sessions of one app (newSession shares the SparkContext, not
     the SQL conf) get distinct handles; a repeat load in one session is
-    a memo hit: the same DataFrame while it is held, the same JVM
-    Dataset after it was dropped."""
+    a memo hit that returns the same DataFrame."""
     from pyspark.sql.session import _monkey_patch_RDD
 
     from pufs_spark.tables import load_table
@@ -31,39 +31,34 @@ def test_load_table_memo_is_per_session(spark, monkeypatch):
         assert b._jdf.sparkSession().equals(other._jsparkSession)
         assert load_table(spark, SF_DIR, "region") is a
         assert load_table(other, SF_DIR, "region") is b
-        jb = b._jdf
-        del b
-        again = load_table(other, SF_DIR, "region")
-        assert again._jdf.equals(jb) and again.sparkSession is other
-        assert again.count() == 5
+        assert b.count() == 5
     finally:
         _monkey_patch_RDD(spark)  # newSession re-points RDD.toDF
 
 
 def test_load_table_memo_drops_collected_sessions(spark, monkeypatch):
-    """The memo holds its sessions weakly: once a session is collected
-    its entries are gone, so a later session can never be served a
-    handle bound to a dead one (an id() key could be recycled)."""
+    """A session's memo entries never keep it alive: once dropped, the
+    session and the handles it memoized are collected together, so a
+    later session can never be served a handle bound to a dead one (an
+    id() key could be recycled)."""
     import gc
     import weakref
 
     from pyspark.sql.session import _monkey_patch_RDD
 
-    from pufs_spark import tables
+    from pufs_spark.tables import load_table
 
     monkeypatch.setenv("PUFS_ENTRY_CACHE", "1")
     other = spark.newSession()
-    tables.load_table(other, SF_DIR, "nation")
-    assert "nation" in {name for _, name in tables._TABLE_MEMO[other]}
-    gc.collect()  # sessions earlier tests dropped leave the memo first
-    before = len(tables._TABLE_MEMO)
+    handle = weakref.ref(load_table(other, SF_DIR, "nation"))
+    assert load_table(other, SF_DIR, "nation") is handle()
     gone = weakref.ref(other)
     del other
     # newSession points RDD.toDF at the newest session; point it back
     _monkey_patch_RDD(spark)
     gc.collect()
     assert gone() is None
-    assert len(tables._TABLE_MEMO) == before - 1
+    assert handle() is None
 
 
 def test_ship_package_covers_streaming_planner(spark):
@@ -152,8 +147,10 @@ def test_ship_package_does_not_accrete_temp_zips(spark, tmp_path, monkeypatch):
     # Re-ship a changed package from a new private dir (a new process
     # dir, or a source edit in a long-lived driver): it gets a new
     # name, so Spark does not find the first zip's name with other
-    # contents, and the session still runs Python tasks that import
-    # the package.
+    # contents. The changed zip stays registered as a Spark file, which
+    # every later task's executor fetches; it is taken back off the
+    # driver's sys.path and the workers' includes before any task runs,
+    # so this and later tests import the package under test.
     src = tmp_path / "src" / "pufs_spark"
     shutil.copytree(
         sess._PKG_SRC, src, ignore=shutil.ignore_patterns("__pycache__")
@@ -161,18 +158,24 @@ def test_ship_package_does_not_accrete_temp_zips(spark, tmp_path, monkeypatch):
     (src / "_reship_probe.py").write_text("# changes the zip's contents\n")
     monkeypatch.setattr(sess, "_PKG_SRC", str(src))
     monkeypatch.setattr(sess, "_pkg_dir", None)
-    spark.sparkContext._pufs_pkg_shipped = False
-    sess._ship_package(spark)
+    monkeypatch.setattr(sys, "path", list(sys.path))  # addPyFile prepends
+    sc = spark.sparkContext
+    includes = list(sc._python_includes)
+    sc._pufs_pkg_shipped = False
+    try:
+        sess._ship_package(spark)
+    finally:
+        sc._python_includes[:] = includes
     second = sess._pkg_dir
     assert second != first
     changed = os.listdir(second)
     assert len(changed) == 1 and changed != shipped
     got = (
-        spark.sparkContext.parallelize(range(4), 4)
-        .map(lambda _: __import__("pufs_spark.tables").__name__)
+        sc.parallelize(range(4), 4)
+        .map(lambda _: __import__("pufs_spark.tables").__file__)
         .collect()
     )
-    assert got == ["pufs_spark"] * 4
+    assert len(got) == 4 and not any(changed[0] in f for f in got), got
 
 
 def test_initial_shuffle_partitions_scales_with_input():
