@@ -645,8 +645,8 @@ class DataStore:
     def freeze(self, inode: int = ROOT_INODE) -> str:
         """F1: bottom-up Merkle snapshot, memoized on bid IS NOT NULL
         (reference: core/datastore.go:1116-1199). Driver recursion is
-        fine here (FS trees are shallow); the distributed level-wise
-        variant for huge catalogs is plans/merkle.freeze_nodes_df."""
+        fine here (FS trees are shallow); the distributed variant for
+        huge catalogs is plans/merkle.freeze_nodes_df."""
         node = self.get_node(inode)
         if node.bid is not None:
             return node.bid  # memoized: unchanged subtree

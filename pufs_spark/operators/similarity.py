@@ -16,8 +16,6 @@ DuckDB oracle's list arithmetic bit-for-bit).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -33,33 +31,13 @@ from pyspark.sql import functions as F
 # exchange AND the candidate distinct). 64k rows x 8 tables x 520 B
 # ~= 270 MB planned shuffle at the cap — well inside one box's
 # comfort, and per-partition bytes shrink linearly on a real cluster.
-def _env_int(name: str, default: int) -> int:
-    """Env override parsed advisory-never-fatal (ADVICE r14): a
-    malformed PUFS_LSH_* value logs and falls back to the default
-    instead of crashing module import (matching table_row_count's
-    stance — sizing knobs must never take the engine down)."""
-    raw = os.environ.get(name)
-    if raw is None:
-        return default
-    try:
-        return int(raw)
-    except ValueError:
-        import logging
-
-        logging.getLogger("pufs_spark").warning(
-            "ignoring malformed %s=%r (not an int); using %d",
-            name, raw, default,
-        )
-        return default
-
-
-_VEC_INLINE_MAX_ROWS = _env_int("PUFS_LSH_INLINE_MAX_ROWS", 64 * 1024)
+_VEC_INLINE_MAX_ROWS = 64 * 1024
 
 # Below this row count the hyperplane matmul is microseconds of work —
 # spread_for_compute's plan compile (+exchange) costs more than the
 # single-core compute it would parallelize (measured: the sf0.1 S1
 # corpus is 2.2k rows; the spread win was measured at 20k+, sf1.0).
-_SPREAD_MIN_ROWS = _env_int("PUFS_LSH_SPREAD_MIN_ROWS", 10000)
+_SPREAD_MIN_ROWS = 10000
 
 
 def _as_double(col):

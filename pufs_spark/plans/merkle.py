@@ -1,48 +1,37 @@
-"""Distributed Merkle freeze / push — the level-wise DataFrame variant
-of F1-F3 for catalogs too big for driver recursion.
+"""Distributed Merkle freeze / push / GC — F1-F3 and F6 as DataFrame
+plans for catalogs too big for driver recursion.
 
 Reference: bottom-up memoized freeze (core/datastore.go:1116-1199),
 collect-unpushed DFS (core/datastore.go:1074-1114), sequential push loop
 (core/datastore.go:999-1072, comment at :1032 'could do in parallel' —
 here it IS parallel: uploads run executor-side per partition).
 
-Plan shape per tree level (deepest first):
-    children = nodes at depth d
-    manifests = children.groupBy(parent)
-                 .agg(sha2(concat of sorted child lines))
-    nodes     = nodes join manifests  (broadcast: one level of dirs)
-Only dirty nodes re-hash (memoization = filter bid IS NULL), so an
-incremental freeze touches just the dirty paths' levels — the same
+Freeze plan (freeze_nodes_df), one physical shape at every size:
+    file_lines = files.groupBy(parent).agg(collect_list(manifest line))
+    leaf dirs  → sha2 over their sorted lines, JVM-side, distributed
+    interior   → dir rows + line groups, repartition(1), one Python
+                 task hashes the interior DAG bottom-up in memory
+Only dirty nodes re-hash (memoization = a set bid is its subtree), so
+an incremental freeze reads just the dirty dirs' lines — the same
 asymptotics as the reference's dirty-bit pruning.
 """
 
 from __future__ import annotations
+
+import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pufs_spark.catalog.datastore import ROOT_INODE
 
-# Shared-subplan frames of the in-flight freeze (see _shared). r15
-# bounded this with a tight FIFO (4 frames — one freeze's worth), which
-# prevented cross-run cache reuse only by COINCIDENCE of eviction
-# order, and self-cancelled sharing on repeated freezes in one session
-# (VERDICT r15 #2): freeze N+1's persist() was a no-op on the
-# canonically-identical entry still registered from freeze N, and the
-# FIFO eviction that followed unpersisted that shared entry — so every
-# freeze after the first ran with NO cross-branch sharing (collect_list
-# x2, distinct x3 re-executed; wall-flat at sf0.1 but real money at
-# sf10). r16: the lifetime is scoped per INVOCATION instead —
-# freeze_nodes_df drains every frame of the previous freeze before it
-# persists its own, which (a) keeps in-run sharing on every freeze, and
-# (b) deterministically prevents a later run's byte-identical subplans
-# from reading an earlier run's cached blocks (the bench must recompute
-# from parquet every run). The budget stays only as a leak backstop for
-# _shared callers outside freeze_nodes_df; it is sized above any one
-# freeze's frame count (level-wise registers one frame per tree level).
+# Shared-subplan frames of the in-flight freeze (see _shared). Their
+# lifetime is one freeze_nodes_df invocation: it drains the previous
+# freeze's frames before persisting its own, so every freeze keeps
+# in-run sharing and no run reads a predecessor's cached blocks (the
+# bench must recompute from parquet every run).
 _ACTIVE_FREEZE_FRAMES: list = []
-_ACTIVE_FREEZE_BUDGET = 128
-_ACTIVE_FREEZE_LOCK = __import__("threading").Lock()
+_ACTIVE_FREEZE_LOCK = threading.Lock()
 
 
 def _drain_freeze_frames() -> None:
@@ -79,12 +68,6 @@ def _shared(df: DataFrame) -> DataFrame:
     p = df.persist()
     with _ACTIVE_FREEZE_LOCK:
         _ACTIVE_FREEZE_FRAMES.append(p)
-        while len(_ACTIVE_FREEZE_FRAMES) > _ACTIVE_FREEZE_BUDGET:
-            old = _ACTIVE_FREEZE_FRAMES.pop(0)
-            try:
-                old.unpersist()
-            except Exception:  # noqa: BLE001 — dead context
-                pass
     return p
 
 
@@ -146,25 +129,15 @@ _MANIFEST_LINE_SQL = (
 )
 
 
-def _manifest_line():
-    """_MANIFEST_LINE_SQL as a Column (single parse per use)."""
-    return F.expr(_MANIFEST_LINE_SQL)
-
-
-def _freeze_dirs_single_task(
-    leveled: DataFrame,
-    memoized: bool,
-    prune_clean: bool = True,
-    interior_ids: DataFrame | None = None,
-) -> DataFrame:
-    """Dir bids for a catalog whose DIR METADATA fits one task: the
-    LEAF tier (dirs with no dir children — in a real FS tree nearly
-    all dirs, holding nearly all file lines) is hashed DISTRIBUTED by
-    a pure sha2-over-sorted-lines expression; the interior DAG — one
-    branching factor smaller per level — flows, together with the
-    leaf bids as pre-memoized rows and the interior dirs' own file
-    lines, into a single-partition mapInPandas that finishes the
-    bottom-up hash in memory. Two shuffles + one Arrow-batched task.
+def _freeze_dirs(leveled: DataFrame, memoized: bool, prune: bool) -> DataFrame:
+    """Dir bids, bottom-up: the LEAF tier (dirs with no dir children —
+    in a real FS tree nearly all dirs, holding nearly all file lines)
+    is hashed DISTRIBUTED by a pure sha2-over-sorted-lines expression;
+    the interior DAG — one branching factor smaller per level — flows,
+    together with the leaf bids as manifest lines and the interior
+    dirs' own file lines, into a single-partition mapInPandas that
+    finishes the bottom-up hash in memory. Two shuffles + one
+    Arrow-batched task.
 
     The leaf tier was the serial bottleneck: at the sf1.0 tile
     (1.65M nodes, 150k leaf dirs over 1.5M file lines) the previous
@@ -173,13 +146,24 @@ def _freeze_dirs_single_task(
     interior dir count and makes the catalog-sized work whole-stage
     codegen.
 
+    The one task holds the interior dirs plus their manifest lines, as
+    the reference's in-process freeze holds the whole tree. Measured on
+    a 4-CPU, 15 GB host with a 5g driver: a complete 4-ary tree of 5M
+    dirs and 5M files (1.25M interior dirs, 1.25M interior-dir files)
+    freezes in 115 s with the Python worker peaking at 2.4 GB RSS; a
+    level-synchronous plan (one job chain per tree level) took 156 s on
+    the same frame for the same bids.
+
+    ``prune`` (memoized, mostly clean) drops the file lines and line
+    groups of clean dirs before they are shuffled.
+
     Matches encode_dir_manifest exactly: lines sorted codepoint-wise
     (Python ``sort`` == Spark ``array_sort`` == UTF8String binary
     order on strings), null fields skipped (``concat_ws`` semantics),
     empty dirs hash the empty manifest (sha256(""))."""
     d_all = leveled.where(F.col("is_dir"))
     files = leveled.where(~F.col("is_dir"))
-    if memoized and prune_clean:
+    if prune:
         # The reference's core incremental contract
         # (core/datastore.go:1123-1125): a dir with a bid IS its
         # unchanged subtree, so its file lines are never read — prune
@@ -187,9 +171,10 @@ def _freeze_dirs_single_task(
         # this, a 0%-dirty freeze paid the same file-lines shuffle as
         # a full one (measured 5.4 s vs 5.4 s at sf1.0, r12
         # tools/profile_f1_stages.py); with it, the shuffle is
-        # O(dirty files). The dirty set is dir-count-bounded (≤ the
-        # single-task precondition) and broadcast, so the prune is a
-        # map-side hash filter — no extra exchange.
+        # O(dirty files). ``prune`` holds only while at most
+        # _MEMO_MAX_DIRTY_FRAC of the dirs are dirty, so the broadcast
+        # dirty set is at most half the dir count of inode longs, and
+        # the prune is a map-side hash filter — no extra exchange.
         dirty_ids = _shared(
             d_all.where(F.col("bid").isNull())
             .select(F.col("inode").alias("parent"))
@@ -200,22 +185,19 @@ def _freeze_dirs_single_task(
     # collect_list aggregation ran twice and the interior-ids distinct
     # three times (~4.5 s of the 7 s sf1.0 wall, r12). _shared persists
     # each so it materializes once, inside the final job (see _shared
-    # for why not localCheckpoint). Sizes are bounded by the
-    # single-task precondition (catalog fits one task), so
-    # executor-resident blocks are safe here.
+    # for why not localCheckpoint). persist() is MEMORY_AND_DISK, so a
+    # frame larger than executor memory spills instead of failing.
     file_lines_all = _shared(
         files.groupBy(F.col("parent").alias("inode")).agg(
             F.expr(f"collect_list({_MANIFEST_LINE_SQL})").alias("_flines")
         )
     )
-    # dirs having at least one DIR child (root's self-loop excluded);
-    # the gate may pass its already-shared copy in (r15)
-    if interior_ids is None:
-        interior_ids = _shared(
-            d_all.where(F.col("parent") != F.col("inode"))
-            .select(F.col("parent").alias("inode"))
-            .distinct()
-        )
+    # dirs having at least one DIR child (root's self-loop excluded)
+    interior_ids = _shared(
+        d_all.where(F.col("parent") != F.col("inode"))
+        .select(F.col("parent").alias("inode"))
+        .distinct()
+    )
 
     # sha256("") — a leaf dir with no file lines hashes the empty
     # manifest; kept as a literal so the hash happens BEFORE the join
@@ -273,7 +255,7 @@ def _freeze_dirs_single_task(
             ).alias("_flines")
         )
     )
-    if memoized and prune_clean:
+    if prune:
         # a clean interior parent short-circuits on its bid and never
         # reads lines — don't ship its (leaf-count-sized) line groups
         # through the single-task exchange
@@ -372,99 +354,6 @@ def _freeze_dirs_single_task(
     return interior_bids.unionByName(leaf_bids.select("inode", "bid"))
 
 
-def _freeze_dirs_levelwise(
-    leveled: DataFrame,
-    memoized: bool,
-    checkpoint_every: int,
-    prune_clean: bool = True,
-) -> DataFrame:
-    """Dir bids for catalogs whose dir metadata does NOT fit one task:
-    level-synchronous bottom-up hashing. Still only ONE catalog-sized
-    shuffle (the per-dir file-line groupBy). Joins here are plain
-    shuffle joins, NOT broadcasts: this path only runs when the dir
-    metadata exceeds one task, and ``file_lines`` in particular is
-    dir-count ROWS but catalog-manifest BYTES — broadcasting it would
-    ship the whole manifest text to every executor per level (and
-    through the driver). All the joins key on inode/parent, so AQE
-    still downgrades to broadcast when a level really is small. Level
-    bid frames feed both the next level and the final output, so the
-    lazy plan doubles per level; ``checkpoint_every`` bounds that with
-    an eager localCheckpoint of a dir-count-sized frame every k
-    levels."""
-    max_d = leveled.agg(F.max("depth")).collect()[0][0] or 0
-    lw_files = leveled.where(~F.col("is_dir"))
-    if memoized and prune_clean:
-        # Same dirty-prune as the single-task path: only null-bid dirs
-        # ever read their file lines, so filter files to dirty parents
-        # BEFORE the catalog-sized collect_list. Here the dirty set can
-        # exceed a broadcast (this path runs above 4M rows), so it is a
-        # plain semi-join — AQE downgrades it to broadcast exactly when
-        # the freeze is mostly clean, which is when the prune pays.
-        lw_dirty = (
-            leveled.where(F.col("is_dir") & F.col("bid").isNull())
-            .select(F.col("inode").alias("parent"))
-        )
-        lw_files = lw_files.join(lw_dirty, "parent", "left_semi")
-    file_lines = (
-        lw_files
-        .withColumn("_line", _manifest_line())
-        .groupBy(F.col("parent").alias("_flp"))
-        .agg(F.array_sort(F.collect_list("_line")).alias("_flines"))
-    )
-    dirs_all = leveled.where(F.col("is_dir")).select(
-        "inode", "parent", "name", "is_dir", "size", "depth", "bid"
-    )
-    prev_dir_bids: DataFrame | None = None
-    level_bids: list[DataFrame] = []
-    empty_arr = F.array().cast("array<string>")
-    for i, d in enumerate(range(max_d, -1, -1)):
-        dirs = dirs_all.where(F.col("depth") == d)
-        if memoized:
-            pre = dirs.where(F.col("bid").isNotNull()).select("inode", "bid")
-            dirs = dirs.where(F.col("bid").isNull())
-        if prev_dir_bids is not None:
-            dir_lines = (
-                dirs_all.where(F.col("depth") == d + 1)
-                .drop("bid")
-                .join(prev_dir_bids, "inode")
-                .withColumn("_line", _manifest_line())
-                .groupBy(F.col("parent").alias("_dlp"))
-                .agg(F.collect_list("_line").alias("_dlines"))
-            )
-        else:
-            dir_lines = None
-        lined = dirs.select("inode").join(
-            file_lines, F.col("inode") == F.col("_flp"), "left"
-        )
-        if dir_lines is not None:
-            lined = lined.join(
-                dir_lines, F.col("inode") == F.col("_dlp"), "left"
-            )
-            all_lines = F.array_sort(
-                F.concat(
-                    F.coalesce(F.col("_flines"), empty_arr),
-                    F.coalesce(F.col("_dlines"), empty_arr),
-                )
-            )
-        else:
-            all_lines = F.coalesce(F.col("_flines"), empty_arr)
-        manifest = F.when(
-            F.size(all_lines) > 0,
-            F.concat(F.array_join(all_lines, "\n"), F.lit("\n")),
-        ).otherwise(F.lit(""))  # empty dir hashes the empty manifest
-        bids = lined.select("inode", F.sha2(manifest, 256).alias("bid"))
-        if memoized:
-            bids = bids.unionByName(pre)
-        if (i + 1) % max(checkpoint_every, 1) == 0:
-            bids = bids.localCheckpoint()
-        level_bids.append(bids)
-        prev_dir_bids = bids
-    all_dir_bids = level_bids[0]
-    for b in level_bids[1:]:
-        all_dir_bids = all_dir_bids.unionByName(b)
-    return all_dir_bids
-
-
 # Dirty-DIR fraction past which a memoized freeze runs the full plan
 # instead: measured crossover at sf1.0 (tools/profile_f1_crossover.py,
 # r13) — memoized ties full up to ~40% dirty dirs and loses ~1.7x by
@@ -476,34 +365,20 @@ def freeze_nodes_df(
     nodes: DataFrame,
     max_depth: int = 64,
     memoized: bool = False,
-    checkpoint_every: int = 8,
-    single_task_max_rows: int = 4_000_000,
 ) -> DataFrame:
     """F1 distributed: returns nodes with dir bids filled bottom-up.
     File nodes must already carry bids (content hashing happens at
     ingest: sha2 over binaryFile content — see ingest_files).
 
-    Two physical strategies behind one result:
-
-    - **single-task** (DIR count ≤ ``single_task_max_rows``): one
-      catalog-sized groupBy collects per-dir file manifest lines, the
-      LEAF dir tier hashes JVM-side, and only the interior DAG — a
-      branching factor smaller than the dir count — reaches a single
-      Arrow-batched task. The whole freeze is ONE job (sf0.1: ~1s vs
-      ~4s for the level plan, vs 5.8s for the r2 per-level-shuffle
-      plan; sf10 / 61.5M rows: ~17s, see BASELINE).
-    - **level-wise** (larger): level-synchronous hashing where every
-      per-level frame stays dir-count-sized and broadcast-joined;
-      depth× small jobs, but no single task ever holds all dir
-      metadata. The threshold gates on DIRS plus files whose parent
-      is INTERIOR (r13; r12 gated dirs alone, which undercounted on
-      bushy trees — interior dirs' own file children DO reach the
-      task as manifest-line groups, only leaf-dir file lines hash
-      JVM-side). A leaf-heavy 60M-file / 1.5M-dir catalog is still
-      fine single-task (interior-file count ~0); 4M gated rows
-      ≈ 400MB of manifest lines through the one exchange and a
-      dir-count-sized broadcast for the join-back — beyond that, go
-      level-wise.
+    One physical plan at every size (see _freeze_dirs): one
+    catalog-sized groupBy collects per-dir file manifest lines, the
+    LEAF dir tier hashes JVM-side, and only the interior DAG — a
+    branching factor smaller than the dir count — reaches a single
+    Arrow-batched task; the dir bids are broadcast-joined back onto the
+    dir rows. The whole freeze is ONE action, whose shuffle stages AQE
+    submits as separate jobs (sf0.1: ~1 s; sf10 / 61.5M rows: ~17 s,
+    see BASELINE), and building it runs no Spark action unless
+    ``memoized`` or a derived depth needs one.
 
     ``memoized=True`` is the reference's dirty-bit pruning
     (core/datastore.go:1123-1125): dirs that already carry a bid are
@@ -519,8 +394,8 @@ def freeze_nodes_df(
     leveled = with_depth(nodes, max_depth)
     sl = leveled.storageLevel
     if not had_depth and not (sl.useMemory or sl.useDisk):
-        # The freeze scans ``leveled`` ~5 times (strategy count, dir
-        # and file branches, join-back). When depth came from the
+        # The freeze scans ``leveled`` several times (dir and file
+        # branches, join-back, memoized gate). When depth came from the
         # caller the lineage is a cheap columnar scan and re-executing
         # it is FASTER than one catalog-sized cache write (sf1.0 A/B:
         # persist-first e2e 2.6-3.4 s vs 2.4-2.7 s without — and the
@@ -534,87 +409,33 @@ def freeze_nodes_df(
         # registered like every freeze frame so the next invocation's
         # drain releases it (it was leaked before r16)
         leveled = _shared(leveled)
-    # Two-stage gate (ADVICE r12): dirs alone are not the task's whole
-    # input — INTERIOR dirs' own file children become manifest-line
-    # groups that flow through the repartition(1) exchange (only
-    # LEAF-dir file lines hash JVM-side). A tree where every dir has
-    # both subdirs and many files passes a dir-only gate yet ships a
-    # catalog-sized manifest into one task. The dir-count bound also
-    # bounds the interior-id broadcast below; the count of files whose
-    # parent is interior — the one quantity not bounded by the dir
-    # count — is added before the final verdict. On the leaf-heavy
-    # trees real catalogs look like it counts ~0.
-    # One gate job, three counters (r15, guide §1.2 "remove passes"):
-    # n_files rides the same cached-nodes scan as the dir counters, so
-    # catalogs where dirs+files already fit one task — every gate SF —
-    # skip the interior-file job below entirely (n_interior_files <=
-    # n_files bounds it; the old unconditional two-job gate cost F1 a
-    # full job+gap per call: ~0.3 s at sf0.1, 1-2 s at sf10).
-    gate_row = leveled.agg(
-        F.expr("sum(CASE WHEN is_dir THEN 1 ELSE 0 END)").alias("n"),
-        F.expr(
-            "sum(CASE WHEN is_dir AND bid IS NULL THEN 1 ELSE 0 END)"
-        ).alias("dirty"),
-        F.expr("sum(CASE WHEN NOT is_dir THEN 1 ELSE 0 END)").alias(
-            "n_files"
-        ),
-    ).first()
-    n_dirs = gate_row["n"] or 0
-    n_files = gate_row["n_files"] or 0
-    # Auto-switch (r13 crossover, tools/profile_f1_crossover.py /
-    # BASELINE.md): the dirty-prune's broadcasts and semi-joins are
-    # pure overhead once most dirs re-hash anyway — at sf1.0 the
-    # memoized plan ties the full freeze up to ~40% dirty DIRS and
-    # loses ~1.7x by ~65% (10% dirty FILES: each leaf dir holds ~10
-    # files, so file-dirt compounds). Past the threshold, drop only
-    # the PRUNE machinery; preset bids are still honored everywhere
-    # (memoized's contract — a set bid IS its subtree — must not
-    # depend on the dirty ratio). The dirty count rides the gate
-    # aggregate — no extra job.
-    # sum() over zero rows is SQL NULL: a dir-less frame must take the
-    # prune path (nothing to re-hash), not raise on None <= float.
-    prune_clean = (
-        memoized
-        and (gate_row["dirty"] or 0) <= _MEMO_MAX_DIRTY_FRAC * n_dirs
-    )
-    single_task = n_dirs <= single_task_max_rows
-    interior_ids = None
-    if single_task and n_dirs + n_files > single_task_max_rows:
-        # Only mid-size catalogs (dirs fit, dirs+files don't) need the
-        # exact interior-file count; n_interior_files <= n_files bounds
-        # everything smaller. The interior set is shared (persisted) so the
-        # single-task plan below reuses the materialized RDD instead of
-        # re-running the distinct exchange (one fewer AQE stage job).
-        interior_ids = _shared(
-            leveled.where(
-                F.col("is_dir") & (F.col("parent") != F.col("inode"))
-            )
-            .select(F.col("parent").alias("inode"))
-            .distinct()
+    prune = False
+    if memoized:
+        # Auto-switch (r13 crossover, tools/profile_f1_crossover.py /
+        # BASELINE.md): the dirty-prune's broadcasts and semi-joins are
+        # pure overhead once most dirs re-hash anyway — at sf1.0 the
+        # memoized plan ties the full freeze up to ~40% dirty DIRS and
+        # loses ~1.7x by ~65% (10% dirty FILES: each leaf dir holds ~10
+        # files, so file-dirt compounds). Past the threshold, drop only
+        # the PRUNE machinery; preset bids are still honored everywhere
+        # (memoized's contract — a set bid IS its subtree — must not
+        # depend on the dirty ratio). One aggregate action.
+        gate_row = leveled.agg(
+            F.expr("sum(CASE WHEN is_dir THEN 1 ELSE 0 END)").alias("n"),
+            F.expr(
+                "sum(CASE WHEN is_dir AND bid IS NULL THEN 1 ELSE 0 END)"
+            ).alias("dirty"),
+        ).first()
+        # sum() over zero rows is SQL NULL: a dir-less frame must take
+        # the prune path (nothing to re-hash), not raise on None <= float.
+        prune = (gate_row["dirty"] or 0) <= _MEMO_MAX_DIRTY_FRAC * (
+            gate_row["n"] or 0
         )
-        n_interior_files = (
-            leveled.where(~F.col("is_dir"))
-            .join(
-                F.broadcast(interior_ids.withColumnRenamed("inode", "_ip")),
-                F.col("parent") == F.col("_ip"),
-                "left_semi",
-            )
-            .count()
-        )
-        single_task = n_dirs + n_interior_files <= single_task_max_rows
-    if single_task:
-        all_dir_bids = _freeze_dirs_single_task(
-            leveled, memoized, prune_clean, interior_ids=interior_ids
-        )
-        # the bid table provably fits one task → broadcast the join-back
-        all_dir_bids = F.broadcast(all_dir_bids)
-    else:
-        # dir metadata exceeds one task: a broadcast would collect it
-        # through the driver — shuffle-join instead (AQE may still
-        # downgrade if the bid table turns out small)
-        all_dir_bids = _freeze_dirs_levelwise(
-            leveled, memoized, checkpoint_every, prune_clean
-        )
+    # The bid table is one row per dir (an inode and a 64-char bid),
+    # collected through the driver for the broadcast, so the driver
+    # heap bounds the dir count (5M dirs complete under a 5g driver,
+    # see _freeze_dirs).
+    all_dir_bids = F.broadcast(_freeze_dirs(leveled, memoized, prune))
     files = leveled.where(~F.col("is_dir"))
     dirs_out = (
         leveled.where(F.col("is_dir"))

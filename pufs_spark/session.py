@@ -102,15 +102,12 @@ def get_spark(
         # see _initial_shuffle_partitions.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get(
-                "PUFS_SHUFFLE_INITIAL",
-                str(
-                    _initial_shuffle_partitions(
-                        input_bytes,
-                        floor=max(shuffle_partitions, cpus),
-                        cap=max(shuffle_partitions, cpus * 32),
-                    )
-                ),
+            str(
+                _initial_shuffle_partitions(
+                    input_bytes,
+                    floor=max(shuffle_partitions, cpus),
+                    cap=max(shuffle_partitions, cpus * 32),
+                )
             ),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -126,21 +123,6 @@ def get_spark(
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
             "true",
-        )
-        # Scan-split floor (r16, guide §6): maxSplitBytes =
-        # min(maxPartitionBytes, max(openCostInBytes, bytes/cores)).
-        # The 4 MB default models HDFS seek+open cost; on local/NVMe
-        # (and object stores with range reads) 1 MB is realistic, and
-        # the knob only bites when bytes/cores < 4 MB — the small-scan
-        # regime where the 4 MB floor left e.g. the sf0.1 lineitem
-        # scan at 3 tasks on 32 cores (measured r16 A/B over the six
-        # lineitem-scanning headline queries: 10-35% per query at
-        # sf0.1; BY CONSTRUCTION no effect once input/cores exceeds
-        # 4 MB — at sf10 splits are ~40 MB, at 100 TB they are
-        # maxPartitionBytes-sized).
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("PUFS_OPEN_COST", "1m"),
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

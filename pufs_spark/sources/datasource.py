@@ -222,9 +222,8 @@ class PufsReader(DataSourceReader):
         # above this many catalog rows surviving row-group pruning, the
         # planner stops materializing file rows on the driver (~100 B
         # each — fine to ~10^7, wrong at 10^8) and emits row-group
-        # RANGE partitions whose tasks read their own file lists. 4M
-        # matches the merkle level-wise threshold — one consistent
-        # "driver-sized" constant across the engine.
+        # RANGE partitions whose tasks read their own file lists (4M
+        # rows, ~400 MB of driver-side file rows at ~100 B each).
         self.max_driver_rows = int(options.get("maxdriverrows", 4_000_000))
         # Range-partition granularity when content is read: one task
         # per this many catalog rows, so a 1M-row row group doesn't

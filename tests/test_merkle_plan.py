@@ -1,5 +1,5 @@
-"""Distributed (level-wise) Merkle freeze must agree with the
-driver-side recursive freeze, plus the derived-FS-tree builders."""
+"""Distributed Merkle freeze must agree with the driver-side recursive
+freeze, plus GC, push and the derived-FS-tree builders."""
 
 from pyspark.sql import functions as F
 
@@ -14,11 +14,7 @@ from tests.conftest import SF_DIR
 import pytest
 
 
-# single_task_max_rows=0 forces the level-wise strategy; the default
-# exercises the single-task dir-DAG path. Both must agree with the
-# driver-side recursive freeze bit-for-bit.
-@pytest.mark.parametrize("st_rows", [4_000_000, 0], ids=["single-task", "level-wise"])
-def test_distributed_freeze_matches_driver(spark, tmp_path, st_rows):
+def test_distributed_freeze_matches_driver(spark, tmp_path):
     ds = DataStore(str(tmp_path / "s"), remote=MemRemote())
     a = ds.mkdir(ROOT_INODE, "a")
     b = ds.mkdir(a, "b")
@@ -31,7 +27,7 @@ def test_distributed_freeze_matches_driver(spark, tmp_path, st_rows):
     nodes = queries.nodes_df(spark, ds).withColumn(
         "bid", F.when(F.col("is_dir"), F.lit(None)).otherwise(F.col("bid"))
     )
-    frozen = merkle.freeze_nodes_df(nodes, single_task_max_rows=st_rows)
+    frozen = merkle.freeze_nodes_df(nodes)
     got = {r["inode"]: r["bid"] for r in frozen.collect()}
     for inode, node in ds.nodes.items():
         assert got[inode] == node.bid, f"inode {inode}"
@@ -76,8 +72,7 @@ def test_fs_regions_mask(spark):
     assert mask.count() < regions.count()
 
 
-@pytest.mark.parametrize("st_rows", [4_000_000, 0], ids=["single-task", "level-wise"])
-def test_memoized_freeze_skips_frozen_subtrees(spark, tmp_path, st_rows):
+def test_memoized_freeze_skips_frozen_subtrees(spark, tmp_path):
     """Dirty-bit pruning: a dir with a pre-set bid is returned as-is
     (proven by a sentinel no hash could produce); null-bid dirs
     recompute — ancestors of the sentinel embed it (differ from a clean
@@ -96,7 +91,7 @@ def test_memoized_freeze_skips_frozen_subtrees(spark, tmp_path, st_rows):
     )
     expected = {
         r["inode"]: r["bid"]
-        for r in merkle.freeze_nodes_df(clean, single_task_max_rows=st_rows)
+        for r in merkle.freeze_nodes_df(clean)
         .where("is_dir")
         .collect()
     }
@@ -107,9 +102,7 @@ def test_memoized_freeze_skips_frozen_subtrees(spark, tmp_path, st_rows):
     )
     out = {
         r["inode"]: r["bid"]
-        for r in merkle.freeze_nodes_df(
-            patched, memoized=True, single_task_max_rows=st_rows
-        )
+        for r in merkle.freeze_nodes_df(patched, memoized=True)
         .where("is_dir")
         .collect()
     }
@@ -229,7 +222,7 @@ def test_gc_deletes_unreachable_blocks_with_lease_guard(spark, tmp_path):
 
 
 def test_freeze_strategies_agree_on_random_trees(spark, tmp_path):
-    """Both freeze strategies vs the driver freeze on irregular random
+    """The distributed freeze vs the driver freeze on irregular random
     trees (deep chains, empty dirs, shared content, dirs mixing file
     and dir children at every level) — seeds fixed for reproducibility."""
     import random
@@ -249,15 +242,9 @@ def test_freeze_strategies_agree_on_random_trees(spark, tmp_path):
         nodes = queries.nodes_df(spark, ds).withColumn(
             "bid", F.when(F.col("is_dir"), F.lit(None)).otherwise(F.col("bid"))
         )
-        for st_rows in (4_000_000, 0):
-            got = {
-                r["inode"]: r["bid"]
-                for r in merkle.freeze_nodes_df(
-                    nodes, single_task_max_rows=st_rows
-                ).collect()
-            }
-            for inode, node in ds.nodes.items():
-                assert got[inode] == node.bid, (seed, st_rows, inode)
+        got = {r["inode"]: r["bid"] for r in merkle.freeze_nodes_df(nodes).collect()}
+        for inode, node in ds.nodes.items():
+            assert got[inode] == node.bid, (seed, inode)
 
 
 def test_push_blocks_lease_protocol(spark, tmp_path):
@@ -496,12 +483,10 @@ def test_strided_tile_freeze_levelwise_matches_single_task(spark):
     replica*1e7, which shifts customer/order INODES identically while
     root/region/nation stay shared. A depth stamp thresholding the raw
     inode (`inode < 100000` => dir depth 3) stamps every replica>0
-    customer DIR at file depth — the single-task plan survives (its
-    ordering is structural) but the LEVEL-WISE plan pairs depth d with
-    children at d+1 and silently hashes nations WITHOUT their shifted
-    customer children. Pin: build a two-replica strided tree, stamp
-    depth the way q_f1 does (pmod within the stride block), freeze
-    with BOTH strategies, and require bit-identical bids."""
+    customer DIR at file depth; q_f1 stamps depth with pmod within the
+    stride block instead. The freeze's order is structural (leaf dirs
+    hash JVM-side, and a mis-stamp only makes a dir deeper than its
+    parent), so both stamps must give bit-identical bids."""
     from tests.conftest import SF_DIR
 
     base = fstree.fs_nodes(spark, SF_DIR)
@@ -523,52 +508,43 @@ def test_strided_tile_freeze_levelwise_matches_single_task(spark):
         )
     )
     nodes = base.unionByName(shifted)
+
+    def stamp(frame, key):
+        return frame.withColumn(
+            "depth",
+            F.when(F.col("inode") == 1, 0)
+            .when(key < 10, 1)
+            .when(key < 100, 2)
+            .when(key < 100000, 3)
+            .otherwise(4)
+            .cast("int"),
+        )
+
+    def dir_bids(frame):
+        return {
+            r["inode"]: r["bid"]
+            for r in merkle.freeze_nodes_df(frame)
+            .where(F.col("is_dir")).select("inode", "bid").collect()
+        }
+
     off = F.pmod(F.col("inode"), F.lit(stride))
-    nodes = nodes.withColumn(
-        "depth",
-        F.when(F.col("inode") == 1, 0)
-        .when(off < 10, 1)
-        .when(off < 100, 2)
-        .when(off < 100000, 3)
-        .otherwise(4)
-        .cast("int"),
-    )
-    single = {
-        r["inode"]: r["bid"]
-        for r in merkle.freeze_nodes_df(
-            nodes, single_task_max_rows=10_000_000
-        ).where(F.col("is_dir")).select("inode", "bid").collect()
-    }
-    level = {
-        r["inode"]: r["bid"]
-        for r in merkle.freeze_nodes_df(
-            nodes, single_task_max_rows=0
-        ).where(F.col("is_dir")).select("inode", "bid").collect()
-    }
-    assert single == level and single[1] is not None
+    raw = stamp(nodes, F.col("inode"))
+    # the raw stamp really does put replica-1 customer dirs at depth 4
+    assert raw.where(F.col("is_dir") & (F.col("depth") == 4)).count() > 0
+    pmod_bids = dir_bids(stamp(nodes, off))
+    assert dir_bids(raw) == pmod_bids and pmod_bids[1] is not None
     # the shifted replica actually changed the root (sanity: the tile
     # isn't degenerate — new children reached every ancestor)
-    base_stamped = base.withColumn(
-        "depth",
-        F.when(F.col("inode") == 1, 0)
-        .when(off < 10, 1).when(off < 100, 2)
-        .when(off < 100000, 3).otherwise(4).cast("int"),
-    )
-    lone = {
-        r["inode"]: r["bid"]
-        for r in merkle.freeze_nodes_df(base_stamped)
-        .where(F.col("is_dir")).select("inode", "bid").collect()
-    }
-    assert lone[1] != single[1]
+    lone = dir_bids(stamp(base, off))
+    assert lone[1] != pmod_bids[1]
 
 
 def test_bushy_tree_gate_counts_interior_files(spark, tmp_path):
-    """ADVICE r12: the single-task gate counted DIRS only, but interior
-    dirs' own file children DO flow through the repartition(1) exchange
-    as manifest-line groups — a bushy tree (every dir has both a subdir
-    and many files) passed a dir-only gate while shipping a
-    catalog-sized manifest into one task. The gate must count
-    dirs + interior-parent files; results must be identical either way."""
+    """A bushy tree — every dir has both a subdir and many files —
+    sends its interior dirs' own file lines through the one-task
+    exchange as manifest-line groups next to the dir rows (only
+    leaf-dir lines hash JVM-side). Every bid must match the driver
+    freeze."""
     ds = DataStore(str(tmp_path / "s"), remote=MemRemote())
     cur = ROOT_INODE
     for i in range(4):
@@ -579,22 +555,10 @@ def test_bushy_tree_gate_counts_interior_files(spark, tmp_path):
     nodes = queries.nodes_df(spark, ds).withColumn(
         "bid", F.when(F.col("is_dir"), F.lit(None)).otherwise(F.col("bid"))
     )
-
-    def plan_of(df):
-        return df._jdf.queryExecution().optimizedPlan().toString().lower()
-
-    # 5 dirs (root + d0..d3) pass a dir-only gate of 20; the 30 files
-    # under interior d0..d2 push the true task input to 35 > 20 ->
-    # must go level-wise (no Python map node in the plan)
-    level = merkle.freeze_nodes_df(nodes, single_task_max_rows=20)
-    assert "mapinpandas" not in plan_of(level)
-    # a cap that fits dirs + interior files stays single-task
-    single = merkle.freeze_nodes_df(nodes, single_task_max_rows=64)
-    assert "mapinpandas" in plan_of(single)
-
-    for frozen in (level, single):
-        got = {r["inode"]: r["bid"] for r in frozen.collect()}
-        assert got[ROOT_INODE] == driver_root
+    got = {r["inode"]: r["bid"] for r in merkle.freeze_nodes_df(nodes).collect()}
+    for inode, node in ds.nodes.items():
+        assert got[inode] == node.bid, inode
+    assert got[ROOT_INODE] == driver_root
 
 
 def test_memoized_freeze_on_dirless_frame(spark, tmp_path):
@@ -614,14 +578,12 @@ def test_memoized_freeze_on_dirless_frame(spark, tmp_path):
 
 
 def test_small_catalog_gate_runs_one_job(spark, tmp_path):
-    """r15: the strategy gate is ONE Spark job for catalogs whose
-    dirs+files already fit a single task (n_interior_files <= n_files
-    bounds the verdict, so the old second interior-count job is
-    skipped). Plan construction must not run any other action: the
-    lazy localCheckpoints plan but never execute at build time.
-    Depth is stamped (the real-catalog fast path) so the pointer-
-    doubling derivation — which runs its own convergence jobs — stays
-    out of the count."""
+    """Building a non-memoized freeze runs no Spark action; building a
+    memoized one runs exactly the jobs of its one gate aggregate
+    (n, dirty). The shared frames persist lazily, so no subplan
+    executes at build time. Depth is stamped (the real-catalog fast
+    path) so the pointer-doubling derivation — which runs its own
+    convergence jobs — stays out of the count."""
     ds = DataStore(str(tmp_path / "s"), remote=MemRemote())
     a = ds.mkdir(ROOT_INODE, "a")
     ds.add_immutable_bytes(a, "f1", b"one")
@@ -641,37 +603,44 @@ def test_small_catalog_gate_runs_one_job(spark, tmp_path):
         )
     )
     sc = spark.sparkContext
-    # Baseline: the gate aggregate alone (one action; AQE may split it
-    # into a few stage jobs — count them so the pin below is exact).
-    sc.setJobGroup("gate_only_r15", "gate-only")
-    from pufs_spark.plans.merkle import with_depth
 
-    leveled = with_depth(nodes, 64)
-    leveled.agg(
-        F.sum(F.when(F.col("is_dir"), 1).otherwise(0)).alias("n"),
-        F.sum(
-            F.when(F.col("is_dir") & F.col("bid").isNull(), 1).otherwise(0)
-        ).alias("dirty"),
-        F.sum(F.when(~F.col("is_dir"), 1).otherwise(0)).alias("n_files"),
-    ).first()
-    gate_jobs = len(sc.statusTracker().getJobIdsForGroup("gate_only_r15"))
+    def jobs_of(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            out = build()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    sc.setJobGroup("gate_probe_r15", "gate")
-    try:
-        frozen = merkle.freeze_nodes_df(nodes)  # build only
-        jobs = len(sc.statusTracker().getJobIdsForGroup("gate_probe_r15"))
-        # small catalog: the build runs EXACTLY the gate action — no
-        # interior-file count job, and no eager subplan execution from
-        # the shared frames (the r12-r14 lazy localCheckpoints executed
-        # their stages at build time; _shared/persist must not)
-        assert jobs == gate_jobs, (
-            f"freeze build ran {jobs} jobs vs {gate_jobs} for the gate "
-            "aggregate alone — an extra build-time action crept in"
-        )
-    finally:
-        sc.setJobGroup(None, None)
+    # the gate aggregate alone (one action; AQE may split it into a few
+    # stage jobs — count them so the memoized pin below is exact)
+    _, gate_jobs = jobs_of(
+        "freeze_gate_only",
+        lambda: nodes.agg(
+            F.expr("sum(CASE WHEN is_dir THEN 1 ELSE 0 END)").alias("n"),
+            F.expr(
+                "sum(CASE WHEN is_dir AND bid IS NULL THEN 1 ELSE 0 END)"
+            ).alias("dirty"),
+        ).first(),
+    )
+    assert gate_jobs >= 1
+    expect = ds.freeze()
+
+    frozen, jobs = jobs_of("freeze_build", lambda: merkle.freeze_nodes_df(nodes))
+    assert jobs == 0, f"non-memoized freeze build ran {jobs} jobs"
     got = {r["inode"]: r["bid"] for r in frozen.collect()}
-    assert got[ROOT_INODE] == ds.freeze()
+    assert got[ROOT_INODE] == expect
+
+    memo, memo_jobs = jobs_of(
+        "freeze_build_memoized",
+        lambda: merkle.freeze_nodes_df(nodes, memoized=True),
+    )
+    assert memo_jobs == gate_jobs, (
+        f"memoized freeze build ran {memo_jobs} jobs vs {gate_jobs} for "
+        "the gate aggregate alone — an extra build-time action crept in"
+    )
+    got = {r["inode"]: r["bid"] for r in memo.collect()}
+    assert got[ROOT_INODE] == expect
 
 
 def test_repeat_freeze_keeps_shared_frames(spark, tmp_path):

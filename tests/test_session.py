@@ -253,19 +253,6 @@ def test_feed_probe_file_uri_with_glob_and_authority(tmp_path):
     ]
 
 
-def test_lsh_env_overrides_never_fatal(monkeypatch):
-    """ADVICE r14: a malformed PUFS_LSH_* env value falls back to the
-    default instead of crashing module import."""
-    from pufs_spark.operators.similarity import _env_int
-
-    monkeypatch.setenv("PUFS_LSH_INLINE_MAX_ROWS", "not-an-int")
-    assert _env_int("PUFS_LSH_INLINE_MAX_ROWS", 64 * 1024) == 64 * 1024
-    monkeypatch.setenv("PUFS_LSH_INLINE_MAX_ROWS", "123")
-    assert _env_int("PUFS_LSH_INLINE_MAX_ROWS", 64 * 1024) == 123
-    monkeypatch.delenv("PUFS_LSH_INLINE_MAX_ROWS")
-    assert _env_int("PUFS_LSH_INLINE_MAX_ROWS", 7) == 7
-
-
 def test_footer_column_minmax(tmp_path, spark):
     """table_column_minmax reads row-group stats without a Spark job
     and returns None on missing tables/columns (advisory stance)."""

@@ -51,7 +51,7 @@ def main():
     out["prep_persist_count"] = t(lambda: leveled.count())
     out["rows"] = leveled.count()
 
-    line = merkle._manifest_line()
+    line = F.expr(merkle._MANIFEST_LINE_SQL)
     file_lines_all = (
         leveled.where(~F.col("is_dir"))
         .withColumn("_line", line)
