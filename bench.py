@@ -122,8 +122,9 @@ def main() -> None:
     n_runs = max(5, int(os.environ.get("SPARK_GRAFT_BENCH_N", "5")))
     # Input-sized shuffle start (r14): pass the sf dir's on-disk bytes
     # so initialPartitionNum scales with the workload instead of
-    # sitting at the 32x-cores cap (which cost ~25%/query at sf0.1 —
-    # tools/out/bench_r14_ab_initial32.json).
+    # sitting at the 32x-cores cap (which cost ~25%/query at sf0.1;
+    # the A/B record, tools/out/bench_r14_ab_initial32.json, is in git
+    # history).
     input_bytes = sum(
         os.path.getsize(os.path.join(dp, f))
         for dp, _, fs in os.walk(sf_dir)

@@ -501,10 +501,9 @@ def run_maintenance(
     drift baseline (fresh ``__build__`` row), so the patience counter
     restarts from zero post-retrain by construction.
 
-    A drift log without the ``ts`` column (written before retention
-    existed) has no recency order, so the IVF arm skips it — the
-    first retrain (manual, or after enough fresh batches at the next
-    lineage) recreates the log in the current shape."""
+    A drift log without the ``ts`` column has no recency order and
+    raises ``similarity.DriftLogFormatError``; a retrain
+    (``build_ann_index``) recreates the log in the current shape."""
     res = MaintenanceResult()
     if nd_table is not None and indexes.needs_bloom_rebuild(
         spark, nd_table, max_fpp
@@ -516,11 +515,9 @@ def run_maintenance(
 
     if ann_table is None:
         return res
-    drift_t = f"{ann_table}_drift"
-    if not spark.catalog.tableExists(drift_t):
+    drift_t = similarity._drift_log_table(spark, ann_table)
+    if drift_t is None:
         return res
-    if "ts" not in spark.table(drift_t).columns:
-        return res  # pre-retention log: no recency order to trust
     rows = sorted(
         (
             r for r in similarity.ann_index_drift(spark, ann_table).collect()

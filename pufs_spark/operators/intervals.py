@@ -33,7 +33,8 @@ def merge_intervals(df: DataFrame, key: str = KEY) -> DataFrame:
     finisher built a hash aggregate over O(islands) fine-grained keys —
     at sf10 that was 25M (key,island) groups probing a saturated hash
     map 528 times per key on average, 75% of the whole query's CPU
-    (event-log profile, tools/out/bench_r13 notes). Islands are
+    (event-log profile; the r13 bench notes under tools/out/ are in
+    git history). Islands are
     ordered, so no aggregation is needed:
 
     - the running max of ``end`` over earlier rows (``prev_max_end``)

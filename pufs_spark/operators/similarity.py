@@ -535,14 +535,11 @@ def _assigned_sim_stats(assigned: DataFrame, cent: DataFrame, vec_col: str):
 
 
 # ``ts`` (append wall-clock) orders the log for retention — batch ids
-# are opaque strings, so recency needs its own column. Logs created
-# before the column existed (no ts) keep appending in their old shape
-# and skip retention until the next retrain recreates them.
+# are opaque strings, so recency needs its own column. Every log the
+# build baseline creates has it; ``_drift_log_table`` rejects one that
+# does not.
 _DRIFT_SCHEMA = (
     "batch_id string, ts double, n bigint, mean_sim double, p10_sim double"
-)
-_DRIFT_SCHEMA_LEGACY = (
-    "batch_id string, n bigint, mean_sim double, p10_sim double"
 )
 # compact_drift_log retention: keep __build__ + this many newest rows.
 DRIFT_KEEP_LAST = 256
@@ -556,6 +553,26 @@ DRIFT_KEEP_LAST = 256
 DRIFT_KEEP_FIRST = 8
 
 
+class DriftLogFormatError(ValueError):
+    """An IVF drift log without the ``ts`` append-time column (every
+    log ``build_ann_index`` creates has one)."""
+
+
+def _drift_log_table(spark, table: str) -> str | None:
+    """The name of ``table``'s drift log, or None when it has none.
+    A log without ``ts`` raises DriftLogFormatError: retention and the
+    maintenance retrain trigger order rows by it."""
+    drift_t = f"{table}_drift"
+    if not spark.catalog.tableExists(drift_t):
+        return None
+    if "ts" not in spark.table(drift_t).columns:
+        raise DriftLogFormatError(
+            f"{drift_t} has no ts column, so it is not in the current "
+            "format: retrain the index (build_ann_index) to recreate it"
+        )
+    return drift_t
+
+
 def _append_drift_row(
     spark, table: str, batch_id, stats, path=None, overwrite=False
 ) -> None:
@@ -564,34 +581,27 @@ def _append_drift_row(
     disk, or the recreated external table would resurface them and a
     duplicated ``__build__`` row would fan out every
     ``ann_index_drift`` answer through its baseline join. A per-batch
-    write into an index that predates the drift log (no table, no
-    baseline) is skipped: there is nothing to compare against until
-    the next retrain creates the baseline."""
+    write into an index with no drift log (no baseline) is skipped:
+    there is nothing to compare against until the next retrain creates
+    the baseline."""
     import time
 
     from pufs_spark.operators import indexes
 
-    drift_t = f"{table}_drift"
+    row = (batch_id, float(time.time()), stats["n"], stats["mean_sim"],
+           stats["p10_sim"])
     if overwrite:
-        df = spark.createDataFrame(
-            [(batch_id, float(time.time()), stats["n"], stats["mean_sim"],
-              stats["p10_sim"])],
-            _DRIFT_SCHEMA,
-        )
+        drift_t = f"{table}_drift"
+        df = spark.createDataFrame([row], _DRIFT_SCHEMA)
         spark.sql(f"DROP TABLE IF EXISTS {drift_t}")
         loc = path or f"{indexes.table_location(spark, table)}_drift"
         df.write.option("path", loc).mode("overwrite").saveAsTable(drift_t)
-    elif spark.catalog.tableExists(drift_t):
-        if "ts" in spark.table(drift_t).columns:
-            row = (batch_id, float(time.time()), stats["n"],
-                   stats["mean_sim"], stats["p10_sim"])
-            schema = _DRIFT_SCHEMA
-        else:  # pre-ts log: keep its shape until the next retrain
-            row = (batch_id, stats["n"], stats["mean_sim"], stats["p10_sim"])
-            schema = _DRIFT_SCHEMA_LEGACY
-        spark.createDataFrame([row], schema).write.mode("append").insertInto(
-            drift_t
-        )
+        return
+    drift_t = _drift_log_table(spark, table)
+    if drift_t is not None:
+        spark.createDataFrame([row], _DRIFT_SCHEMA).write.mode(
+            "append"
+        ).insertInto(drift_t)
 
 
 def compact_drift_log(
@@ -611,36 +621,28 @@ def compact_drift_log(
     count exceeds ``max_files``. The log is best-effort diagnostics
     (same contract as the per-batch drift row itself), so the rewrite
     is collect → overwrite without a swap protocol: a crash inside it
-    can lose log rows, never data. A pre-ts log (no append-time
-    column) compacts files but keeps all rows — bounded at the next
-    retrain, which recreates the log in the current shape. Returns
-    True iff it rewrote."""
+    can lose log rows, never data. A log without ``ts`` raises
+    DriftLogFormatError (``_drift_log_table``). Returns True iff it
+    rewrote."""
     from pufs_spark.operators import indexes
 
     if keep_last is None:
         keep_last = DRIFT_KEEP_LAST
-    drift_t = f"{table}_drift"
-    if not spark.catalog.tableExists(drift_t):
+    drift_t = _drift_log_table(spark, table)
+    if drift_t is None:
         return False
     if len(indexes.list_table_files(spark, drift_t)) <= max_files:
         return False
-    has_ts = "ts" in spark.table(drift_t).columns
     rows = spark.table(drift_t).collect()
-    if has_ts:
-        build = [tuple(r) for r in rows if r["batch_id"] == "__build__"]
-        rest = sorted(
-            (tuple(r) for r in rows if r["batch_id"] != "__build__"),
-            key=lambda t: (t[1], t[0]),  # (ts, batch_id): stable on ties
-        )
-        tail = rest[-keep_last:] if keep_last > 0 else []
-        head = rest[: max(0, min(DRIFT_KEEP_FIRST, len(rest) - len(tail)))]
-        kept = build + head + tail
-        schema = _DRIFT_SCHEMA
-    else:
-        kept = [tuple(r) for r in rows]
-        schema = _DRIFT_SCHEMA_LEGACY
+    build = [tuple(r) for r in rows if r["batch_id"] == "__build__"]
+    rest = sorted(
+        (tuple(r) for r in rows if r["batch_id"] != "__build__"),
+        key=lambda t: (t[1], t[0]),  # (ts, batch_id): stable on ties
+    )
+    tail = rest[-keep_last:] if keep_last > 0 else []
+    head = rest[: max(0, min(DRIFT_KEEP_FIRST, len(rest) - len(tail)))]
     (
-        spark.createDataFrame(kept, schema)
+        spark.createDataFrame(build + head + tail, _DRIFT_SCHEMA)
         .coalesce(1)
         .write.mode("overwrite")
         .insertInto(drift_t, overwrite=True)

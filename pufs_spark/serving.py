@@ -173,12 +173,14 @@ class MirrorStore:
     stat() touch NO data buckets at all: the fold maintains per-bucket
     (nodes, dirs, files, bytes) totals in the mirror meta and the
     depth-1 entries in a rootdir sidecar, so both ops are meta-sized
-    reads (the every-bucket sweep survives only for states published
-    before the aggregates existed). The cache is a
-    byte-capped LRU (``max_cache_bytes``, default 1 GiB): the server's
-    resident memory is O(cap) even when the request mix eventually
-    touches every bucket of a 10M-inode catalog — an evicted bucket
-    rebuilds from one parquet read.
+    reads. A state without those aggregates, or written under another
+    bucket-key depth, is not in the current on-disk format:
+    ``snapshot()`` raises CatalogError for it (the check lives in
+    ``mirror._resolve_state_ex`` and ``mirror._read_rootdir``). The
+    cache is a byte-capped LRU (``max_cache_bytes``, default 1 GiB):
+    the server's resident memory is O(cap) even when the request mix
+    eventually touches every bucket of a 10M-inode catalog — an
+    evicted bucket rebuilds from one parquet read.
 
     Consistency: every query runs against a ``snapshot()`` — version,
     state dir, bucket count, and top-group summary resolved from ONE
@@ -220,8 +222,7 @@ class MirrorStore:
     # exceeds the cache cap, caching would thrash by construction and
     # every miss takes the filtered-read path (MirrorSnapshot computes
     # this once per request from the meta it already read). The
-    # on-disk threshold stays as the fallback for legacy states
-    # without totals and as a single-pathological-bucket guard.
+    # on-disk threshold stays as a single-pathological-bucket guard.
     POINT_READ_PARQUET_BYTES = 4 << 20
     # Estimated decoded bytes per catalog row (dict/tuple overhead +
     # twice the path text at typical path lengths) — matches
@@ -618,7 +619,8 @@ class MirrorStore:
     def snapshot(self) -> "MirrorSnapshot":
         """A consistent view of the CURRENT state: one meta read pins
         (version, state dir, n_buckets, summary, per-bucket totals)
-        for the request's lifetime."""
+        and the state dir's root listing for the request's lifetime.
+        A state not in the current on-disk format raises CatalogError."""
         from pufs_spark.streaming import mirror as M
 
         v, state_dir, n_buckets, summary, totals = M._resolve_state_ex(
@@ -626,11 +628,14 @@ class MirrorStore:
         )
         if v < 0:
             raise E.NotFoundError(f"no mirror state in {self.mirror_dir}")
+        root = self._root_entries(state_dir)
         with self._lock:
             if v >= self._latest_version:
                 self._latest_version = v
                 self._latest_state_dir = state_dir
-        return MirrorSnapshot(self, v, state_dir, n_buckets, summary, totals)
+        return MirrorSnapshot(
+            self, v, state_dir, n_buckets, summary, totals, root
+        )
 
     def _bucket_entry(
         self, state_dir: str, fname: str, no_evict: bool = False,
@@ -702,9 +707,6 @@ class MirrorStore:
                 with self._lock:
                     self._point_freq[fname] = self.POINT_ADMIT_CEIL
         return rows, kids
-
-    def _bucket_rows(self, state_dir: str, fname: str) -> dict:
-        return self._bucket_entry(state_dir, fname)[0]
 
     def _stat_sig(self, f: str):
         import os as _os
@@ -943,7 +945,7 @@ class MirrorStore:
             min(self.POINT_ADMIT_CEIL, int(breakeven)),
         )
 
-    def _admission_est(self, fname: str, sig, admit_est: int | None) -> int:
+    def _admission_est(self, fname: str, sig, admit_est: int) -> int:
         """The decoded-size estimate admission checks against headroom.
 
         Preference order (ADVICE r11): (1) the bucket's own measured
@@ -952,15 +954,13 @@ class MirrorStore:
         directions, so a bucket whose real decode ratio sits below the
         EST_MIN_DECODE_RATIO floor is no longer permanently barred from
         a cache it fits; (2) the fold-maintained per-row estimate
-        (``admit_est``) or, for legacy states, parquet size × 25 —
-        both floored at parquet size × EST_MIN_DECODE_RATIO so a stale
-        or corrupted tiny estimate on a never-measured giant bucket
-        can't stall the request thread on a hopeless decode."""
+        (``admit_est``), floored at parquet size × EST_MIN_DECODE_RATIO
+        so a stale or corrupted tiny estimate on a never-measured giant
+        bucket can't stall the request thread on a hopeless decode."""
         m = self._measured_bytes.get(fname)
         if m is not None and m[0] > 0:
             return max(1, int(m[1] * sig[2] / m[0]))
-        est = admit_est if admit_est is not None else sig[2] * 25
-        return max(est, int(sig[2] * self.EST_MIN_DECODE_RATIO))
+        return max(admit_est, int(sig[2] * self.EST_MIN_DECODE_RATIO))
 
     def _note_point_read(self, fname: str, est: int) -> bool:
         """Record one point read against ``fname``; True = admit the
@@ -1000,7 +1000,7 @@ class MirrorStore:
 
     def _point_lookup(
         self, state_dir: str, fname: str, path: str,
-        force_point: bool = False, admit_est: int | None = None,
+        force_point: bool = False, admit_est: int = 0,
     ):
         """One path's (is_dir, size, bid) or None. Cached bucket →
         dict hit; oversized uncached bucket (or ``force_point``, the
@@ -1011,9 +1011,7 @@ class MirrorStore:
         headroom (``_note_point_read`` admission → decode-and-cache
         once, warm-dict speed after); small uncached →
         decode-and-cache as before. ``admit_est`` is the snapshot's
-        estimated decoded size from the fold-maintained totals; when
-        absent (legacy state) the parquet size × 25 stands in
-        (sorted paths compress ~20-25×, r9 bench)."""
+        estimated decoded size from the fold-maintained totals."""
         import os as _os
 
         import pyarrow.parquet as pq
@@ -1052,7 +1050,7 @@ class MirrorStore:
 
     def _dir_children(
         self, state_dir: str, fname: str, parent: str,
-        force_point: bool = False, admit_est: int | None = None,
+        force_point: bool = False, admit_est: int = 0,
     ) -> list[tuple[str, tuple]]:
         """One bucket's direct children of ``parent``. Cached → kids
         index; oversized uncached (or ``force_point``) → prefix-range
@@ -1170,11 +1168,11 @@ class MirrorStore:
                     out.append((name, (d, s, b)))
         return out
 
-    def _root_entries(self, state_dir: str) -> list[tuple[str, tuple]] | None:
+    def _root_entries(self, state_dir: str) -> list[tuple[str, tuple]]:
         """The root listing from the state dir's rootdir sidecar —
         fold-maintained depth-1 entries, so "/" never faults in data
-        buckets. None when the state predates the sidecar (callers
-        fall back to the bucket sweep). Cached by the sidecar file's
+        buckets. A state dir without the sidecar raises CatalogError
+        (``mirror._read_rootdir``). Cached by the sidecar file's
         signature; at most {current, previous} state dirs exist, so
         the cache is pruned to the 4 most recent keys."""
         import os as _os
@@ -1182,18 +1180,14 @@ class MirrorStore:
         from pufs_spark.streaming import mirror as M
 
         f = _os.path.join(state_dir, M.ROOTDIR_FILE)
-        try:
-            st = _os.stat(f)
-        except FileNotFoundError:
-            return None
-        sig = (st.st_ino, st.st_mtime_ns, st.st_size)
+        sig = self._stat_sig(f)
         with self._lock:
             hit = self._rootdir_cache.get(f)
-            if hit is not None and hit[0] == sig:
+            if sig is not None and hit is not None and hit[0] == sig:
                 return hit[1]
+        # sig is None: no sidecar (format error) or a pruned state dir
+        # (retryable OSError) — _read_rootdir raises the right one
         per_bucket = M._read_rootdir(state_dir)
-        if per_bucket is None:
-            return None
         out = sorted(
             (name, (bool(d), s, b))
             for kids in per_bucket.values()
@@ -1205,17 +1199,6 @@ class MirrorStore:
                 self._rootdir_cache.pop(next(iter(self._rootdir_cache)))
         return out
 
-    # -- back-compat conveniences (each resolves a fresh snapshot) ------
-
-    def lookup(self, path: str) -> tuple:
-        return self.snapshot().lookup(path)
-
-    def list_dir(self, path: str) -> list[tuple[str, tuple]]:
-        return self.snapshot().list_dir(path)
-
-    def stat_totals(self) -> dict:
-        return self.snapshot().stat_totals()
-
 
 class MirrorSnapshot:
     """One request's pinned view over a MirrorStore (see
@@ -1225,18 +1208,20 @@ class MirrorSnapshot:
 
     def __init__(self, store: MirrorStore, version: int, state_dir: str,
                  n_buckets: int, summary: dict[int, int],
-                 totals: dict[int, tuple] | None = None):
+                 totals: dict[int, tuple],
+                 root: list[tuple[str, tuple]]):
         self.store = store
         self.version = version
         self.state_dir = state_dir
         self.n_buckets = n_buckets
         self.summary = summary
         self.totals = totals
+        self.root = root
         # Decoded-state-exceeds-cap: caching would thrash (every miss
         # evicts another bucket's hot entries), so misses take the
         # filtered-read path instead. Computed from the meta this
         # snapshot already read — no extra I/O per request.
-        self.point_reads = totals is not None and (
+        self.point_reads = (
             store.EST_DECODED_BYTES_PER_ROW
             * sum(t[0] for t in totals.values())
             > store.max_cache_bytes
@@ -1247,26 +1232,15 @@ class MirrorSnapshot:
 
         return f"bucket-{M._bucket(path, self.n_buckets):04d}.parquet"
 
-    def _admit_est(self, fname: str) -> int | None:
+    def _admit_est(self, fname: str) -> int:
         """Estimated decoded bytes of one bucket from the
         fold-maintained per-bucket node totals — what hot-bucket
-        admission checks against the cache headroom. None (legacy
-        state without totals) lets the store fall back to its
-        parquet-size estimate."""
-        if self.totals is None:
-            return None
+        admission checks against the cache headroom."""
         t = self.totals.get(int(fname[7:11]))
         return (
             0 if t is None
             else self.store.EST_DECODED_BYTES_PER_ROW * int(t[0])
         )
-
-    def _all_rows(self):
-        import os as _os
-
-        for fname in sorted(_os.listdir(self.state_dir)):
-            if fname.startswith("bucket-"):
-                yield from self.store._bucket_rows(self.state_dir, fname).items()
 
     def lookup(self, path: str) -> tuple:
         """(is_dir, size, bid) or NotFoundError. One bucket touched —
@@ -1293,51 +1267,40 @@ class MirrorSnapshot:
         subtree shares its key prefix); a depth-1 dir lists from the
         buckets its top-group summary names; the root reads the
         fold-maintained rootdir sidecar and touches no data bucket."""
-        import os as _os
-
         from pufs_spark.streaming import mirror as M
 
         norm = path.rstrip("/") or "/"
         if norm == "/":
-            # fold-maintained depth-1 entries: zero data-bucket reads
-            # (VERDICT r8 finding 1 — the old every-bucket sweep both
-            # cost thousands of parquet reads at the 10M-inode cap AND
-            # evicted the hot lookup buckets from the byte-capped LRU)
-            fast = self.store._root_entries(self.state_dir)
-            if fast is not None:
-                return list(fast)
-            buckets = [  # pre-upgrade state: one sweep, next fold backfills
-                f
-                for f in sorted(_os.listdir(self.state_dir))
-                if f.startswith("bucket-")
+            # fold-maintained depth-1 entries, pinned by the snapshot:
+            # zero data-bucket reads (VERDICT r8 finding 1 — an
+            # every-bucket sweep both cost thousands of parquet reads at
+            # the 10M-inode cap AND evicted the hot lookup buckets from
+            # the byte-capped LRU)
+            return list(self.root)
+        fname = self._fname_for(norm)
+        row = self.store._point_lookup(
+            self.state_dir, fname, norm,
+            force_point=self.point_reads,
+            admit_est=self._admit_est(fname),
+        )
+        if row is None:
+            raise E.NotFoundError(norm)
+        if not row[0]:  # a file: same error the DataStore raises
+            raise E.NotDirError(norm)
+        depth = len([c for c in norm.strip("/").split("/") if c])
+        if depth < M.BUCKET_DEPTH:
+            buckets = [
+                f"bucket-{b:04d}.parquet"
+                for b in sorted(
+                    M._buckets_for_top(norm, self.n_buckets, self.summary)
+                )
             ]
         else:
-            fname = self._fname_for(norm)
-            row = self.store._point_lookup(
-                self.state_dir, fname, norm,
-                force_point=self.point_reads,
-                admit_est=self._admit_est(fname),
-            )
-            if row is None:
-                raise E.NotFoundError(norm)
-            if not row[0]:  # a file: same error the DataStore raises
-                raise E.NotDirError(norm)
-            depth = len([c for c in norm.strip("/").split("/") if c])
-            if depth < M.BUCKET_DEPTH:
-                buckets = [
-                    f"bucket-{b:04d}.parquet"
-                    for b in sorted(
-                        M._buckets_for_top(norm, self.n_buckets, self.summary)
-                    )
-                ]
-            else:
-                buckets = [
-                    f"bucket-{M._bucket(norm, self.n_buckets):04d}.parquet"
-                ]
+            buckets = [f"bucket-{M._bucket(norm, self.n_buckets):04d}.parquet"]
         if len(buckets) > 1:
-            # depth-1 (or legacy root sweep): one batched dataset scan
-            # over every point-read bucket instead of N sequential
-            # filtered reads (see _dir_children_multi)
+            # depth-1: one batched dataset scan over every point-read
+            # bucket instead of N sequential filtered reads (see
+            # _dir_children_multi)
             return sorted(
                 self.store._dir_children_multi(
                     self.state_dir, buckets, norm,
@@ -1356,28 +1319,14 @@ class MirrorSnapshot:
         return sorted(out)
 
     def stat_totals(self) -> dict:
-        """Catalog totals. With fold-maintained per-bucket totals in
-        the meta (every state published since they exist), this is a
-        pure meta read — zero bucket files touched, O(n_buckets)
-        addition. The sweep below survives only for states that
-        predate the totals; the next fold backfills them."""
-        if self.totals is not None:
-            nodes = dirs = files = nbytes = 0
-            for n, d, f, by in self.totals.values():
-                nodes += n
-                dirs += d
-                files += f
-                nbytes += by
-            return {"nodes": nodes, "dirs": dirs, "files": files,
-                    "bytes": nbytes}
+        """Catalog totals from the fold-maintained per-bucket totals in
+        the meta — zero bucket files touched, O(n_buckets) addition."""
         nodes = dirs = files = nbytes = 0
-        for _, (is_dir, size, _bid) in self._all_rows():
-            nodes += 1
-            if is_dir:
-                dirs += 1
-            else:
-                files += 1
-                nbytes += size or 0
+        for n, d, f, by in self.totals.values():
+            nodes += n
+            dirs += d
+            files += f
+            nbytes += by
         return {"nodes": nodes, "dirs": dirs, "files": files, "bytes": nbytes}
 
 

@@ -44,11 +44,12 @@ def _initial_shuffle_partitions(
     """Size AQE's initialPartitionNum to the workload (VERDICT r13
     #2/#6): a flat 32x-cores start is right once shuffles carry GBs
     (R2 sf10 cached-merge A/B: 14-48 s at 1024 vs 70-140 s at 32) but
-    costs ~25% per query at tiny SFs (r14 quiet-box A/B,
-    tools/out/bench_r14_ab_initial32.json: 18 of 21 queries 17-53%
-    faster at 32 on a 17.5 MB input). One planned partition per ~1 MB
-    of ON-DISK input approximates 64 MB of in-memory shuffle per
-    partition at parquet's typical 5-10x decompression factor —
+    costs ~25% per query at tiny SFs (r14 quiet-box A/B: 18 of 21
+    queries 17-53% faster at 32 on a 17.5 MB input; the record,
+    tools/out/bench_r14_ab_initial32.json, is in git history). One
+    planned partition per ~1 MB of ON-DISK input approximates 64 MB
+    of in-memory shuffle per partition at parquet's typical 5-10x
+    decompression factor —
     17.5 MB (sf0.1) floors at the core count, ~1.8 GB (sf10) caps at
     32x cores; both measured endpoints land on their measured-best
     setting, and the ramp between is monotone in data size."""

@@ -293,11 +293,16 @@ class PufsReader(DataSourceReader):
                     return False
         return True
 
-    def _file_rows(self, pf, row_groups: list[int]) -> list:
+    def _matching_rows(self, pf, row_groups: list[int], start: int = 0,
+                       count: int | None = None):
+        """(path, inode, size, bid) of the frozen files under the prefix
+        that pass every pushed filter, over rows ``start`` to
+        ``start + count`` of ``row_groups`` — the one row filter both
+        planning tiers apply (driver-side ``partitions``, executor-side
+        ``_range_rows``), so they return identical rows."""
         t = pf.read_row_groups(
             row_groups, columns=["path", "inode", "size", "bid", "is_dir"]
-        )
-        rows = []
+        ).slice(start, count)
         for path, inode, size, bid, is_dir in zip(
             t["path"].to_pylist(),
             t["inode"].to_pylist(),
@@ -314,8 +319,7 @@ class PufsReader(DataSourceReader):
             row = (path, inode, size, bid)
             if self._pushed and not self._keep(row):
                 continue
-            rows.append(row)
-        return rows
+            yield row
 
     def _keep(self, row: tuple[str, int, int, str]) -> bool:
         vals = dict(zip(("path", "inode", "size", "bid"), row))
@@ -381,7 +385,7 @@ class PufsReader(DataSourceReader):
         if not kept:
             return [PufsFilePartition([])]
         if est <= self.max_driver_rows:
-            rows = sorted(self._file_rows(pf, kept))
+            rows = sorted(self._matching_rows(pf, kept))
             self.plan_stats["driver_rows"] = len(rows)
             parts = pack_rows(rows, self.cores, self.want_content)
             return [PufsFilePartition(p) for p in parts] or [
@@ -397,34 +401,13 @@ class PufsReader(DataSourceReader):
         return parts
 
     def _range_rows(self, partition: PufsRangePartition):
-        """Executor-side file list for one row-group slice — the task
-        re-applies exactly the predicates driver-side materialization
-        would have (prefix + pushed filters + file-only), so both
-        planning tiers return identical rows."""
+        """Executor-side file list for one row-group slice."""
         import pyarrow.parquet as pq
 
-        pf = pq.ParquetFile(self.catalog)
-        t = pf.read_row_group(
-            partition.rg,
-            columns=["path", "inode", "size", "bid", "is_dir"],
-        ).slice(partition.start, partition.count)
-        for path, inode, size, bid, is_dir in zip(
-            t["path"].to_pylist(),
-            t["inode"].to_pylist(),
-            t["size"].to_pylist(),
-            t["bid"].to_pylist(),
-            t["is_dir"].to_pylist(),
-        ):
-            if is_dir or bid is None:
-                continue
-            if self.prefix != "/" and not (
-                path == self.prefix or path.startswith(self.prefix + "/")
-            ):
-                continue
-            row = (path, inode, size, bid)
-            if self._pushed and not self._keep(row):
-                continue
-            yield row
+        return self._matching_rows(
+            pq.ParquetFile(self.catalog), [partition.rg],
+            partition.start, partition.count,
+        )
 
     def read(self, partition):
         rows = (

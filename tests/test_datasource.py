@@ -883,50 +883,6 @@ def test_mirror_skewed_catalog_stays_o_changed(spark, tmp_path):
     assert rows == {"/"}
 
 
-def test_mirror_bucket_depth_migration(spark, tmp_path):
-    """State written under a different bucket-key depth (e.g. a
-    pre-round-6 depth-1 mirror) must be migrated wholesale on the next
-    fold — reading it bucket-locally under the current rule would load
-    the wrong buckets silently."""
-    import json as _json
-
-    from pufs_spark.catalog import commitlog as CL
-    from pufs_spark.streaming import mirror as M
-
-    root = str(tmp_path / "cat")
-    mdir = str(tmp_path / "mirror")
-    ckpt = str(tmp_path / "ckpt")
-    w, log = CL.open_log(root)
-    d = w.mkdir(ROOT_INODE, "data")
-    for i in range(8):
-        w.add_immutable_bytes(d, f"f{i}", b"x" * (i + 1))
-    log.commit(w)
-
-    def refresh():
-        q = M.start_catalog_mirror(spark, root, mdir, ckpt)
-        q.awaitTermination(120)
-
-    refresh()
-    # simulate an old-rule mirror: strip the recorded depth
-    meta_path = os.path.join(mdir, M.META_FILE)
-    meta = _json.load(open(meta_path))
-    del meta["bucket_depth"]
-    with open(meta_path, "w") as f:
-        _json.dump(meta, f)
-
-    w.add_immutable_bytes(w.resolve_path("/data"), "late", b"late")
-    log.commit(w)
-    refresh()                                   # fold must migrate
-
-    rows = {
-        r["path"]: (r["is_dir"], r["size"]) 
-        for r in M.read_mirror(spark, mdir).collect()
-    }
-    assert rows["/data/late"] == (False, 4)
-    assert len(rows) == 2 + 8 + 1               # /, /data, 8 files, late
-    assert _json.load(open(meta_path))["bucket_depth"] == M.BUCKET_DEPTH
-
-
 def test_cdc_replay_path_returns_iterator(tmp_path):
     """Restart replay runs readBetweenOffsets on an EXECUTOR, where
     pyspark's plan_data_source_read validates isinstance(_, Iterator):

@@ -473,6 +473,37 @@ def test_emptied_marker_tables_self_heal(spark, docs, tmp_path_factory):
               "bm25_hl_ref", "bm25_hl_ref_stats")
 
 
+def test_drift_log_without_ts_is_rejected(spark, tmp_path):
+    """Every drift log ``build_ann_index`` creates carries the ``ts``
+    append-time column. A log without it is not in the current format:
+    the per-batch append, compaction and the maintenance retrain
+    trigger all raise DriftLogFormatError naming the retrain, instead
+    of appending in another shape or skipping retention."""
+    from pufs_spark.operators import ingest, similarity
+
+    _drop(spark, "ivf_nots_drift")
+    spark.createDataFrame(
+        [("__build__", 4, 0.9, 0.8)],
+        "batch_id string, n bigint, mean_sim double, p10_sim double",
+    ).write.option("path", str(tmp_path / "drift")).saveAsTable(
+        "ivf_nots_drift"
+    )
+    try:
+        stats = {"n": 1, "mean_sim": 0.5, "p10_sim": 0.4}
+        with pytest.raises(similarity.DriftLogFormatError,
+                           match="build_ann_index"):
+            similarity._append_drift_row(spark, "ivf_nots", "b0", stats)
+        with pytest.raises(similarity.DriftLogFormatError,
+                           match="build_ann_index"):
+            similarity.compact_drift_log(spark, "ivf_nots", max_files=0)
+        with pytest.raises(similarity.DriftLogFormatError,
+                           match="build_ann_index"):
+            ingest.run_maintenance(spark, ann_table="ivf_nots")
+        assert spark.table("ivf_nots_drift").count() == 1
+    finally:
+        _drop(spark, "ivf_nots_drift")
+
+
 def test_ivf_retrain_at_same_path_resets_drift_log(spark, tmp_path_factory):
     """A retrain (build_ann_index at the SAME path — the documented
     runbook) must reset the drift log: DROP TABLE on an external table

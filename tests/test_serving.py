@@ -14,6 +14,15 @@ from pufs_spark.catalog.datastore import ROOT_INODE, DataStore
 from pufs_spark.sources.sparse import SparseFreezer
 
 
+def _swept_rows(store, state_dir):
+    """Every (path, row) of a mirror state, decoded bucket by bucket
+    through ``store``'s cache: the full-sweep oracle for the
+    fold-maintained aggregates."""
+    for fname in sorted(os.listdir(state_dir)):
+        if fname.startswith("bucket-"):
+            yield from store._bucket_entry(state_dir, fname)[0].items()
+
+
 @pytest.fixture()
 def served(tmp_path):
     store = DataStore(str(tmp_path))
@@ -389,7 +398,7 @@ def test_mirror_cache_is_byte_bounded_lru(spark, tmp_path):
     snap = unbounded.snapshot()
     # fault in every bucket explicitly (stat/root-listing no longer
     # touch data buckets — they read fold-maintained aggregates)
-    for _ in snap._all_rows():
+    for _ in _swept_rows(unbounded, snap.state_dir):
         pass
     full = unbounded.cached_bytes()
     assert full > 0
@@ -448,12 +457,12 @@ def test_stat_and_root_listing_read_zero_data_buckets(spark, tmp_path):
             nfiles += 1
     M._fold_rows(str(tmp_path / "cat"), mdir, batch, spark=spark)
 
-    # the sweep's answers, as the oracle (forced via the fallback path)
+    # the sweep's answers, as the oracle
     ref = serving.MirrorStore(mdir)
     snap = ref.snapshot()
     sweep_stat = {"nodes": 0, "dirs": 0, "files": 0, "bytes": 0}
     root_sweep = []
-    for p, (d, s, _b) in snap._all_rows():
+    for p, (d, s, _b) in _swept_rows(ref, snap.state_dir):
         sweep_stat["nodes"] += 1
         if d:
             sweep_stat["dirs"] += 1
@@ -507,9 +516,9 @@ def test_stat_and_root_listing_read_zero_data_buckets(spark, tmp_path):
     assert "rootfile-new" in names2 and "d05" not in names2
 
     # answers must also match a fresh full sweep after the fold
-    snap2 = serving.MirrorStore(mdir).snapshot()
+    store2 = serving.MirrorStore(mdir)
     resweep = {"nodes": 0, "dirs": 0, "files": 0, "bytes": 0}
-    for _p, (d, s, _b) in snap2._all_rows():
+    for _p, (d, s, _b) in _swept_rows(store2, store2.snapshot().state_dir):
         resweep["nodes"] += 1
         if d:
             resweep["dirs"] += 1
@@ -948,14 +957,17 @@ def test_corrupt_delta_sidecar_falls_back_to_reload(spark, tmp_path):
         assert s2.lookup("/a/f0") == (False, 999, "b-new")
 
 
-def test_pre_aggregate_state_falls_back_then_backfills(spark, tmp_path):
-    """A mirror state published before the fold-time aggregates
-    existed has no meta totals and no rootdir sidecar: serving must
-    fall back to the sweep (same answers), and the NEXT fold must
-    backfill both so the fast path engages."""
-    import json as _json
-    import os
-
+@pytest.mark.parametrize(
+    "damage", ["no_bucket_depth", "no_totals", "no_rootdir_sidecar"]
+)
+def test_state_not_in_current_format_is_rejected(tmp_path, damage):
+    """The mirror has one on-disk format: a meta without
+    ``bucket_depth`` or without per-bucket ``totals``, or a state dir
+    without its rootdir sidecar, is rejected by the next fold and by
+    serving alike with a CatalogError naming the fix (rebuild from the
+    commit log) — neither migrates, sweeps nor backfills it. An empty
+    mirror dir still reads as version -1."""
+    from pufs_spark.catalog import errors as CE
     from pufs_spark.sources.datasource import CDC_SCHEMA
     from pufs_spark.streaming import mirror as M
 
@@ -965,52 +977,67 @@ def test_pre_aggregate_state_falls_back_then_backfills(spark, tmp_path):
         return dict(zip(fields, (version, 0.0, "t", "delta", change, path,
                                  is_dir, size, bid)))
 
-    mdir = str(tmp_path / "mirror")
-    batch = [row(1, "upsert", "/", True, 0, None)]
-    for i in range(6):
-        batch.append(row(1, "upsert", f"/t{i}", True, 0, None))
-        for j in range(4):
-            batch.append(row(1, "upsert", f"/t{i}/f{j}", False, i + j,
-                             f"b-{i}-{j}"))
-    M._fold_rows(str(tmp_path / "cat"), mdir, batch, spark=spark)
+    root, mdir = str(tmp_path / "cat"), str(tmp_path / "mirror")
+    os.makedirs(mdir)
+    v, _sd, _n, summary, totals = M._resolve_state_ex(mdir)
+    assert (v, summary, totals) == (-1, {}, {})
+    M._fold_rows(root, mdir, [
+        row(1, "upsert", "/", True, 0, None),
+        row(1, "upsert", "/t0", True, 0, None),
+        row(1, "upsert", "/t0/f0", False, 5, "b-0"),
+    ])
+    assert serving.MirrorStore(mdir).snapshot().stat_totals()["files"] == 1
 
-    # simulate a pre-upgrade state: strip the aggregates
     meta_path = os.path.join(mdir, M.META_FILE)
-    meta = _json.load(open(meta_path))
-    stripped = {k: v for k, v in meta.items() if k != "totals"}
-    with open(meta_path, "w") as f:
-        _json.dump(stripped, f)
-    sd = os.path.join(mdir, meta["state_dirname"])
-    os.remove(os.path.join(sd, M.ROOTDIR_FILE))
+    meta = json.load(open(meta_path))
+    if damage == "no_rootdir_sidecar":
+        os.remove(os.path.join(mdir, meta["state_dirname"], M.ROOTDIR_FILE))
+    else:
+        del meta["bucket_depth" if damage == "no_bucket_depth" else "totals"]
+        with open(meta_path, "w") as f:
+            json.dump(meta, f)
+    states = sorted(os.listdir(mdir))
 
-    svc = serving.MirrorService(serving.MirrorStore(mdir))
-    st = svc.handle({"op": "stat"})
-    assert st["files"] == 24 and st["dirs"] == 7  # sweep fallback works
-    names = {e["name"] for e in
-             svc.handle({"op": "get_dir_contents", "path": "/"})["entries"]}
-    assert names == {f"t{i}" for i in range(6)}
+    fix = "rebuild the mirror from the commit log"
+    with pytest.raises(CE.CatalogError, match=fix):
+        M._fold_rows(root, mdir, [row(2, "upsert", "/t0/f1", False, 7, "b-1")])
+    assert json.load(open(meta_path)) == meta  # nothing published
+    assert sorted(os.listdir(mdir)) == states
+    with pytest.raises(CE.CatalogError, match=fix):
+        serving.MirrorStore(mdir).snapshot()
+    if damage != "no_rootdir_sidecar":  # the meta alone carries the version
+        with pytest.raises(CE.CatalogError, match=fix):
+            M.mirror_version(mdir)
+    st = serving.MirrorService(serving.MirrorStore(mdir)).handle({"op": "stat"})
+    assert st["errorMsg"].startswith("CatalogError") and fix in st["errorMsg"]
 
-    # one delta fold backfills: totals + rootdir reappear, fast path on
-    M._fold_rows(str(tmp_path / "cat"), mdir,
-                 [row(2, "upsert", "/t0/f9", False, 100, "b-0-9")],
-                 spark=spark)
-    meta2 = _json.load(open(meta_path))
-    assert "totals" in meta2
-    store = serving.MirrorStore(mdir)
-    svc2 = serving.MirrorService(store)
-    reads = []
 
-    def counting(state_dir, fname, _orig=store._bucket_entry):
-        reads.append(fname)
-        return _orig(state_dir, fname)
+def test_pruned_state_dir_is_retryable_not_a_format_error(tmp_path):
+    """A fold prunes state dirs older than {current, previous} with
+    rmtree, so a slow reader can find a dir whose sidecar is already
+    gone. Once the meta no longer names that dir, its missing sidecar
+    is a FileNotFoundError (MirrorService retries on a fresh snapshot),
+    not the CatalogError of a state in an older format."""
+    from pufs_spark.sources.datasource import CDC_SCHEMA
+    from pufs_spark.streaming import mirror as M
 
-    store._bucket_entry = counting
-    st2 = svc2.handle({"op": "stat"})
-    names2 = {e["name"] for e in
-              svc2.handle({"op": "get_dir_contents", "path": "/"})["entries"]}
-    assert reads == []
-    assert st2["files"] == 25 and st2["bytes"] == st["bytes"] + 100
-    assert names2 == names
+    fields = [c.split()[0] for c in CDC_SCHEMA.split(", ")]
+
+    def row(version, change, path, is_dir=None, size=None, bid=None):
+        return dict(zip(fields, (version, 0.0, "t", "delta", change, path,
+                                 is_dir, size, bid)))
+
+    root, mdir = str(tmp_path / "cat"), str(tmp_path / "mirror")
+    M._fold_rows(root, mdir, [row(1, "upsert", "/", True, 0, None),
+                              row(1, "upsert", "/a", True, 0, None)])
+    old_dir = M._resolve_state(mdir)[1]
+    M._fold_rows(root, mdir, [row(2, "upsert", "/b", True, 0, None)])
+    os.remove(os.path.join(old_dir, M.ROOTDIR_FILE))  # rmtree mid-way
+    with pytest.raises(FileNotFoundError):
+        M._read_rootdir(old_dir)
+    assert {n for n, _ in serving.MirrorStore(mdir).snapshot().root} == {
+        "a", "b"
+    }
 
 
 def test_mirror_fleet_parity_folds_and_failover(spark, tmp_path):

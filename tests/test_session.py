@@ -181,7 +181,8 @@ def test_ship_package_does_not_accrete_temp_zips(spark, tmp_path, monkeypatch):
 def test_initial_shuffle_partitions_scales_with_input():
     """r14: AQE's planned start count follows input bytes — floor at
     the core count for tiny SFs (the flat 32x-cores start cost
-    ~25%/query at sf0.1, tools/out/bench_r14_ab_initial32.json), cap
+    ~25%/query at sf0.1; the A/B record,
+    tools/out/bench_r14_ab_initial32.json, is in git history), cap
     at 32x cores for decade-scale tiles, 1 partition/MB between."""
     from pufs_spark.session import _initial_shuffle_partitions as f
 
