@@ -15,11 +15,20 @@ Architecture (Spark-first, not a port):
 - ``sources``    — remote connectors + the content-addressed store
                    (reference: remote/gcs.go, remote/http.go,
                    core/freezer.go).
-- ``functions``  — scalar helpers (hashing, human sizes).
-- ``streaming``  — transfer monitoring over an event log
-                   (reference: region/pending.go, core/freezer.go).
+- ``streaming``  — transfer monitoring over an event log and the
+                   commit-log mirror (reference: region/pending.go,
+                   core/freezer.go).
+- ``serving``    — the catalog metadata service: the reference's gRPC
+                   surface as JSON lines over TCP (reference:
+                   api/api.proto, pufs/cmd/mount.go).
+- ``tables``     — loaders for the test tables (``load_table``).
+- ``session``    — the SparkSession factory (``get_spark``) and the
+                   stat-checked zipimporter cache every Python worker
+                   installs on import (``install_zip_cache_check``).
 """
 
 __version__ = "0.1.0"
 
-from pufs_spark.session import get_spark  # noqa: F401
+from pufs_spark.session import get_spark, install_zip_cache_check  # noqa: F401
+
+install_zip_cache_check()

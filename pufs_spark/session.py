@@ -7,8 +7,61 @@ scale (AQE, shuffle partitions, Arrow) are set identically for both.
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+def install_zip_cache_check() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only
+    when it changed. No-op on Python >= 3.13, which made it lazy.
+
+    PySpark's ``worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()`` at the start of every Python task.
+    On 3.11/3.12 that makes each zipimporter on the worker's
+    ``sys.path`` re-read its whole central directory — the 5,359-entry
+    spark-core jar and ``pyspark.zip`` several times over, 0.1–0.3 CPU s
+    per task on a 4-CPU host. Workers are reused across tasks, so with
+    the check a worker re-reads each archive once after the install,
+    and every later call is one ``stat`` per importer.
+
+    The patched method re-reads (through the original one) when the
+    archive's ``(st_mtime_ns, st_size, st_ino)`` differs from the stamp
+    of its last read here, or when the archive is not in
+    ``zipimport._zip_directory_cache``; otherwise it points the importer
+    at the cached directory. The stamp is taken before the read, so an
+    archive rewritten during the read is read again next time. Installed
+    once, when ``pufs_spark`` is imported — including in every worker
+    that unpickles a closure over the package."""
+    if sys.version_info >= (3, 13):
+        return
+    cls = zipimport.zipimporter
+    if getattr(cls.invalidate_caches, "_pufs_stat_checked", False):
+        return
+    reread = cls.invalidate_caches
+    # archive path -> (st_mtime_ns, st_size, st_ino) at its last read here
+    stamps: dict[str, tuple[int, int, int]] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is not None and files is not None:
+            if stamps.get(self.archive) == stamp:
+                self._files = files
+                return
+        reread(self)
+        if stamp is not None and self.archive in zipimport._zip_directory_cache:
+            stamps[self.archive] = stamp
+        else:
+            stamps.pop(self.archive, None)
+
+    invalidate_caches._pufs_stat_checked = True
+    cls.invalidate_caches = invalidate_caches
 
 
 def mem_total_gib() -> float | None:
@@ -149,6 +202,12 @@ def get_spark(
         # pushFilters (point lookups / path prefixes prune partition
         # planning driver-side and skip CAS opens entirely).
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # The JVM-wide cache of compiled codegen classes. One pass over
+        # the 21 headline queries compiles 330-360 distinct classes, so
+        # at Spark's default of 100 entries each pass evicts the last
+        # one's and Janino recompiles 350 of them; at 1000 it
+        # recompiles 1 (perfbench spark_queries, 4 CPUs).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if extra_conf:
         for k, v in extra_conf.items():

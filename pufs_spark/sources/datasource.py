@@ -24,11 +24,17 @@ file rows materialize on the driver only while they fit
 order, into one partition per task slot of the session, or one per
 128 MiB of content when that is more (``pack_rows``), with about equal
 bytes in each.
-The count is kept that low because every Python task pays a fixed
-start-up cost before it reads a row: about 0.2–0.3 CPU s on a 4-core
-host, most of it ``importlib.invalidate_caches()`` re-reading every zip
-on the worker's ``sys.path``. A 2000-file content scan cost 9.7–11.6
-CPU s as 32 tasks of 64 files and 1.9–2.4 s as 4 tasks. Past
+The count is kept that low because Python tasks are not free. Most
+of the fixed start-up cost — ``importlib.invalidate_caches()``
+re-reading every zip on the worker's ``sys.path``, 0.1–0.3 CPU s on a
+4-core host — is now paid once per worker process, not once per task
+(``session.install_zip_cache_check``). What stays per task is the
+scheduling, the closure and the pipe to a worker (about 0.03 CPU s in
+the worker), and a task beyond the slot count still runs after another
+task instead of beside it: more partitions than slots add task
+overhead without adding parallelism. A
+2000-file content scan cost 9.7–11.6 CPU s as 32 tasks of 64 files and
+1.9–2.4 s as 4 tasks, both before the zip check. Past
 ``maxdriverrows`` — a full-lake scan of a 10⁸-file catalog —
 partitions are row-group RANGES and each task reads + filters its own
 file list, keeping the driver O(row groups) at any catalog size (see
@@ -357,8 +363,8 @@ class PufsReader(DataSourceReader):
            registered through ``register_pufs``, else the planning
            host's ``os.cpu_count()``: Spark hands the Python planner no
            session of its own. The count stays at the cores because
-           each Python task costs a fixed ~0.2–0.3 CPU s to start,
-           whatever it reads; ``content_bytes`` is 0 for a
+           a partition past the slot count only queues behind another
+           and adds per-task overhead; ``content_bytes`` is 0 for a
            metadata-only scan. Past the bound — a full-lake scan of a
            10^8-file catalog — partitions become row-group RANGES and
            each task reads + filters its own slice: driver memory stays

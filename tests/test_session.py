@@ -1,6 +1,8 @@
 import os
 import sys
 
+import pytest
+
 from tests.conftest import SF_DIR
 
 from pufs_spark.tables import TPCH_TABLES, load_tables
@@ -270,3 +272,138 @@ def test_footer_column_minmax(tmp_path, spark):
     )
     assert table_column_minmax(str(tmp_path), "embeddings", "nope") is None
     assert table_column_minmax(str(tmp_path), "missing", "vec_id") is None
+
+
+_LAZY_ZIPIMPORT = pytest.mark.skipif(
+    sys.version_info >= (3, 13),
+    reason="zipimporter.invalidate_caches is lazy from Python 3.13 on",
+)
+
+
+@_LAZY_ZIPIMPORT
+def test_invalidate_caches_rereads_only_changed_zips(tmp_path, monkeypatch):
+    """``importlib.invalidate_caches()`` re-reads a zip on ``sys.path``
+    only when its stat changed. The first call after the importer is
+    made reads it once (no stamp yet); later calls read nothing until
+    the zip is rewritten, and a module added by the rewrite imports."""
+    import importlib
+    import zipfile
+    import zipimport
+
+    import pufs_spark  # noqa: F401 — installs the check
+
+    archive = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("pufs_zip_probe_a.py", "A = 1\n")
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("pufs_zip_probe_a").A == 1
+        assert isinstance(sys.path_importer_cache[archive], zipimport.zipimporter)
+        importlib.invalidate_caches()  # stamps the archive
+
+        reads = []
+        read = zipimport._read_directory
+        monkeypatch.setattr(
+            zipimport, "_read_directory", lambda a: reads.append(a) or read(a)
+        )
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 0, reads
+        with zipfile.ZipFile(archive, "w") as zf:
+            zf.writestr("pufs_zip_probe_a.py", "A = 1\n")
+            zf.writestr("pufs_zip_probe_b.py", "B = 2\n")
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 1, reads
+        assert importlib.import_module("pufs_zip_probe_b").B == 2
+    finally:
+        for name in ("pufs_zip_probe_a", "pufs_zip_probe_b"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(archive, None)
+        zipimport._zip_directory_cache.pop(archive, None)
+
+
+@_LAZY_ZIPIMPORT
+def test_worker_tasks_skip_unchanged_zip_rereads(spark):
+    """PySpark calls ``importlib.invalidate_caches()`` at the start of
+    every Python task. Once a reused worker has imported ``pufs_spark``
+    (here, by unpickling the first job's closure), a later task's call
+    reads no archive directory."""
+    import time
+
+    from pufs_spark.session import install_zip_cache_check
+
+    def first(_):
+        install_zip_cache_check()
+        time.sleep(0.3)  # hold the slot, so every idle worker runs one
+        yield os.getpid()
+
+    def second(_):
+        import importlib
+        import zipimport
+
+        reads = []
+        read = zipimport._read_directory
+
+        def counting(archive):
+            reads.append(archive)
+            return read(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        importers = sum(
+            isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values()
+        )
+        yield os.getpid(), importers, len(reads)
+
+    sc = spark.sparkContext
+    warmed = set(sc.parallelize(range(8), 8).mapPartitions(first).collect())
+    got = sc.parallelize(range(4), 4).mapPartitions(second).collect()
+    assert {pid for pid, _, _ in got} <= warmed, (got, warmed)
+    assert all(importers > 0 for _, importers, _ in got), got
+    assert [reads for _, _, reads in got] == [0] * 4, got
+
+
+def test_zip_cache_check_is_a_no_op_from_python_3_13(monkeypatch):
+    import zipimport
+
+    from pufs_spark import session as sess
+
+    def invalidate_caches(self):
+        pass
+
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", invalidate_caches)
+    monkeypatch.setattr(sys, "version_info", (3, 13, 0, "final", 0))
+    sess.install_zip_cache_check()
+    assert zipimport.zipimporter.invalidate_caches is invalidate_caches
+
+
+def test_codegen_cache_outlives_a_query_suite(spark):
+    """A query run again after more than 100 other compiled classes (the
+    default ``spark.sql.codegen.cache.maxEntries``) compiles nothing."""
+    from pyspark.sql import functions as F
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles():
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    def query():
+        return (
+            spark.range(100)
+            .selectExpr("id * 7 + 3 AS x")
+            .groupBy((F.col("x") % 5).alias("k"))
+            .count()
+            .collect()
+        )
+
+    expected = query()
+    before = compiles()
+    for i in range(60):
+        spark.range(3).selectExpr(f"id * {i + 11} + {i} AS y").collect()
+    assert compiles() - before > 100
+    before = compiles()
+    assert sorted(query()) == sorted(expected)
+    assert compiles() == before
